@@ -3,38 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: prints the formatted physical plan for the named
-  * queries (or a default audit set) so pushdown / broadcast /
-  * whole-stage-codegen posture can be inspected per operator.
-  * Usage: Explain <sfDir> [query...]
+  * queries (or every registered query, in sorted order) so pushdown /
+  * broadcast / whole-stage-codegen posture can be inspected per
+  * operator. Usage: Explain <sfDir> [query...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
-      else Seq("q05_filter_project", "q06_join_broadcast", "q07_join_shuffle",
-        "q08_multi_join", "q42_local_supplier", "dd02_ngram_jaccard",
-        "dd03_embed_neardup", "pp02_curate", "pp03_curate_lsh", "tx01_tokens",
-        "ann01_brute_topk", "ann02_ivf_topk", "q23_percentiles",
-        "q43_topn_heap", "q44_range_join", "pp04_pack_sequences",
-        "pp05_decontaminate", "mm04_phash_neardup",
-        "q45_cube", "dd10_incremental", "dd11_incremental_lsh",
-        "pp08_shard_pack", "pp09_decontaminate_fuzzy",
-        "tx11_boilerplate", "tx12_entropy", "tx13_compress", "tx14_unigram_lp",
-        "tx15_bpe_tokens",
-        "ann03_topk_agg", "ann04_lsh_topk", "ann05_pq_topk",
-        "ann07_range_search", "ann08_range_ivf", "ann09_knn_join",
-        "pp14_split_leakage_safe", "pp15_mixture_sample",
-        "q47_heavy_hitters", "q48_funnel", "q49_grouping_sets",
-        "mm06_audio_energy", "pp10_gate_report", "q50_peak_concurrency",
-        "ann06_ivfpq_topk", "q52_quantile_rollup", "q53_bloom_semijoin",
-        "q54_retention_cohorts", "q55_resample_interp",
-        "tx17_bigram_lp", "pr01_pagerank", "mm07_shot_bounds",
-        "dd12_cross_source_dups", "q51_bitmap_rollup", "q58_bitmap64_rollup",
-        "q56_merge_upsert", "q57_session_paths", "pr02_triangles",
-        "q59_merge_pruned", "dd13_cross_source_overlap", "q60_merge_cdc",
-        "q64_indexed_scan", "dd14_takedown",
-        "q69_incremental_mv", "q70_bloom_lookup",
-        "q73_bloom_maintained", "q74_partial_recluster")
+      else SparkEntry.queries.keys.toSeq.sorted
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -49,6 +26,7 @@ object Explain {
       println("---- simple (codegen spans marked *) ----")
       df.explain()
     }
+    operators.MergeTable.cleanupFixtures() // tmp fixture tables (q59-q68)
     spark.stop()
   }
 }

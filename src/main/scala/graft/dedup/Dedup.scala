@@ -221,17 +221,15 @@ object Dedup {
     inter.toDouble / kk
   }
 
-  // stage-split probe surface for ScaleProbe dd02split (r22) — the
-  // private pipeline stages exposed read-only for measurement; no
-  // registered query consumes these
-  private[graft] def probeShingles(s: SparkSession, d: String): DataFrame =
+  // dd02's private pipeline stages exposed read-only as the reference
+  // PairGenSpec checks the pair generator against; no registered
+  // query consumes these
+  private[dedup] def probeShingles(s: SparkSession, d: String): DataFrame =
     shingles(s, d)
-  private[graft] def probeCappedIndex(s: SparkSession, d: String): DataFrame =
-    cappedIndex(s, d)
-  private[graft] def probePostings(s: SparkSession, d: String): DataFrame =
+  private[dedup] def probePostings(s: SparkSession, d: String): DataFrame =
     cappedIndex(s, d).groupBy("s")
       .agg(sort_array(collect_set("doc_id")).as("ds"))
-  private[graft] def probePairs(s: SparkSession, d: String): DataFrame =
+  private[dedup] def probePairs(s: SparkSession, d: String): DataFrame =
     buildJaccardPairs(s, d)
 
   /** Unordered i<j pairs of every posting's sorted `ds` array, as flat
@@ -242,7 +240,7 @@ object Dedup {
     * posting's full pair array before Generate could stream it; two
     * chained explodes over int `sequence`s plus an `element_at`
     * projection stay inside whole-stage codegen end to end and never
-    * materialize a pair array (ScaleProbe dd02pack, end-to-end to
+    * materialize a pair array (OPTIMIZATION_r22.md §8b, end-to-end to
     * scored pairs at sf0.1: slice+struct 2.72 s, index lambdas 2.19,
     * packed-long 2.09 — still constrained to ids < 2^32, still not
     * shipped — two-level explode **1.73 s**, pair sets verified
@@ -572,8 +570,8 @@ object Dedup {
   // are delta-sized; the index side remains a sequential exchange-
   // free streamed scan, whose IO grows with index bytes but never
   // re-shuffles or re-sorts the corpus (the naive re-dedup pays a
-  // corpus-sized shuffle per batch — measured in ScaleProbe `incr`,
-  // PLANS.md R5). The deterministic split
+  // corpus-sized shuffle per batch — measured in PLANS.md R5's
+  // incremental-dedup probe). The deterministic split
   // here stands in for ingest time: base = doc_id % 10 < 8 (already
   // ingested), delta = the rest (arriving batch). Output = the
   // delta's genuinely-new fingerprints with the surviving doc and

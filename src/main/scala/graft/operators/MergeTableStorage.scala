@@ -31,6 +31,12 @@ trait MergeTableStorage { this: MergeTable.type =>
       lit(s"keyed-table write: null value in key column '$keyCol' — " +
         "a null key has no row identity (merge/CDC equality never matches it)")).isNull)
 
+  /** Gates on the sampling-free range write (OPTIMIZATION_r22.md §1):
+    * the most split points the per-row bucket chain takes, and the
+    * most rewritten rows for which it beats the sampled plan. */
+  private val ExplicitRangeBoundsMax = 128
+  private val ExplicitRangeBoundsMaxRows = 4000000L
+
   /** Stage `df` into `staging` as ≤ `nFiles` range-partitioned parquet
     * files on `partCols`, evaluating the input subtree ONCE where the
     * range bounds are already known (r22). `repartitionByRange(n > 1,
@@ -46,28 +52,23 @@ trait MergeTableStorage { this: MergeTable.type =>
     *    comparison chain against the LITERAL split points and shuffle
     *    once through [[SessionBridge.repartitionByBucket]] — NO
     *    sampling pass, one evaluation, one shuffle. Capped at
-    *    `spark.graft.explicitRangeBounds.max` (default 128) splits:
-    *    the chain is a linear scan per row, so very wide rewrites
-    *    keep the sampled plan.
+    *    [[ExplicitRangeBoundsMax]] splits: the chain is a linear
+    *    scan per row, so very wide rewrites keep the sampled plan.
     *  - `nFiles == 1`: RangePartitioner computes no bounds for a
     *    single partition — never evaluated twice to begin with.
-    *  - otherwise: the classic sampled `repartitionByRange`.
-    *    `spark.graft.rangeWriteBarrier=true` additionally pins the
-    *    input with a lazy localCheckpoint so the sample reads blocks
-    *    — MEASURED SLOWER than the re-evaluation on this host for
-    *    both generated and parquet-backed inputs (ScaleProbe
-    *    `rangebarrier`: write 2.59 vs 2.14 s, merge 3.75 vs 3.14 s at
-    *    20M rows), so it defaults OFF and exists for re-measuring on
-    *    hosts where input recomputation is genuinely expensive.
+    *  - otherwise: the classic sampled `repartitionByRange`. Pinning
+    *    the input with a lazy localCheckpoint so the sample reads
+    *    blocks MEASURED SLOWER than the re-evaluation for both
+    *    generated and parquet-backed inputs (OPTIMIZATION_r22.md §1:
+    *    write 2.59 vs 2.14 s, merge 3.75 vs 3.14 s at 20M rows), so
+    *    the input is evaluated twice.
     */
   private[operators] def stageRangeWrite(df: DataFrame, nFiles: Int,
       partCols: Seq[Column], staging: String,
       dropCols: Seq[String] = Nil,
       splits: Option[IndexedSeq[Any]] = None): Unit = {
     val n = math.max(1, nFiles)
-    val cap = df.sparkSession.conf
-      .get("spark.graft.explicitRangeBounds.max", "128").toInt
-    val spOpt = if (n > 1) splits.filter(sp => sp.nonEmpty && sp.size < cap)
+    val spOpt = if (n > 1) splits.filter(sp => sp.nonEmpty && sp.size < ExplicitRangeBoundsMax)
                 else None
     spOpt match {
       case Some(sp) =>
@@ -79,10 +80,7 @@ trait MergeTableStorage { this: MergeTable.type =>
           .repartitionByBucket(df.withColumn("__rb", bucket), "__rb", sp.size + 1)
         (dropCols :+ "__rb").foldLeft(parted)(_ drop _).write.parquet(staging)
       case None =>
-        val barrier = n > 1 && df.sparkSession.conf
-          .get("spark.graft.rangeWriteBarrier", "false") == "true"
-        val pinned = if (barrier) df.localCheckpoint(false) else df
-        dropCols.foldLeft(pinned.repartitionByRange(n, partCols: _*))(_ drop _)
+        dropCols.foldLeft(df.repartitionByRange(n, partCols: _*))(_ drop _)
           .write.parquet(staging)
     }
   }
@@ -102,12 +100,12 @@ trait MergeTableStorage { this: MergeTable.type =>
     * new manifest's stats are computed from the written bytes as
     * always).
     *
-    * ROW-COUNT GATED (`spark.graft.explicitRangeBounds.maxRows`,
-    * default 4M): the bucket shuffle pays an interpreted per-row hop
-    * the native codegen'd exchange doesn't, so past a few million
-    * rewritten rows the avoided sampling evaluation stops paying for
-    * it (ScaleProbe `rangebarrier`: merge 1.03 vs 1.26 s at 2M rows
-    * — bounds win 18% — but 4.3 vs 3.46 s at 20M — sampled wins).
+    * ROW-COUNT GATED ([[ExplicitRangeBoundsMaxRows]]): the bucket
+    * shuffle pays an interpreted per-row hop the native codegen'd
+    * exchange doesn't, so past a few million rewritten rows the
+    * avoided sampling evaluation stops paying for it
+    * (OPTIMIZATION_r22.md §1: merge 1.03 vs 1.26 s at 2M rows —
+    * bounds win 18% — but 4.3 vs 3.46 s at 20M — sampled wins).
     * Small frequent band rewrites (the streaming upsert sink's
     * micro-batches, DML against a day's band) are scheduling-bound
     * and skip the sampling job; bulk maintenance rewrites stay on the
@@ -137,9 +135,7 @@ trait MergeTableStorage { this: MergeTable.type =>
     if (!banded) return None
     val total = chain.map(_.getLong(nIdx)).sum
     if (total <= 0L) return None
-    val maxRows = s.conf
-      .get("spark.graft.explicitRangeBounds.maxRows", "4000000").toLong
-    if (total > maxRows) return None
+    if (total > ExplicitRangeBoundsMaxRows) return None
     val n = math.min(nOut, chain.size)
     val splits = IndexedSeq.newBuilder[Any]
     var cum = 0L

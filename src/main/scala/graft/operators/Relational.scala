@@ -360,6 +360,25 @@ object Relational {
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
 
+  private val ResamplePinMinBytes = 8L << 20
+
+  /** Summed bytes of the data files under `path` (a file, or a
+    * directory of part files; `_`/`.`-prefixed metadata such as
+    * `_SUCCESS` and checksums is skipped), read through Hadoop
+    * `FileSystem` so a `file:`, HDFS or object-store path sizes the
+    * same as a plain local one. 0 when nothing is there.
+    */
+  private[operators] def dataBytes(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // listStatus of a file is that file alone
+    if (!fs.exists(p)) 0L
+    else fs.listStatus(p).iterator.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getLen).sum
+  }
+
   // --- q55: resample + LINEAR INTERPOLATION — q40's hourly grid with
   // the gap-fill upgraded from hold-last to interpolate-between-
   // neighbors (the other standard time-series resample mode; edges
@@ -385,17 +404,13 @@ object Relational {
     // cores) but ~0.3 s SLOWER at sf0.1, where three column-pruned
     // scans of a 2 MB file cost less than materializing blocks — so
     // small inputs keep the re-scan plan (the same
-    // recompute-vs-materialize trade change 1's barrier probe
-    // measured, decided per input).
-    val pinMinBytes = s.conf
-      .get("spark.graft.resample.pinMinBytes", (8L << 20).toString).toLong
-    val evPath = new java.io.File(s"$d/events.parquet")
-    val evBytes =
-      if (evPath.isDirectory)
-        Option(evPath.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-      else evPath.length()
+    // recompute-vs-materialize trade as the range-write barrier,
+    // OPTIMIZATION_r22.md §1 and §9, decided per input).
     val base0 = Tables.events(s, d).select("user_id", "ts", "value")
-    val base = if (evBytes >= pinMinBytes) base0.localCheckpoint(false) else base0
+    val base =
+      if (dataBytes(s, s"$d/events.parquet") >= ResamplePinMinBytes)
+        base0.localCheckpoint(false)
+      else base0
     val ev = base
       .groupBy(col("user_id"), unix_micros(col("ts")).as("us"))
       .agg(max("value").as("v"))

@@ -437,10 +437,9 @@ object Pipeline {
     * range-partition → per-bucket totals → prefix offsets over the
     * (nParts)-row bucket table → bucket-local running sum + offset.
     * Input (doc_id, n); output adds `cum`. No window ever sees more
-    * than one bucket's rows. Shared with [[graft.ScaleProbe]] so the
-    * measured plan IS the shipped plan.
+    * than one bucket's rows.
     */
-  private[graft] def globalCumSum(toks: DataFrame, nParts: Int = 32): DataFrame = {
+  private[pipeline] def globalCumSum(toks: DataFrame, nParts: Int = 32): DataFrame = {
     // internal columns __-prefixed (Quantiles' collision-hygiene rule,
     // the discipline globalRank/keyedCumSum already follow): a caller
     // legitimately carrying a `bkt`/`off` column must not be clobbered

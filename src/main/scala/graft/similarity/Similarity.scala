@@ -747,7 +747,7 @@ object Similarity {
     * The real cost axis is CANDIDATE volume: n × nProbe × cell
     * occupancy. Bounded occupancy — nCells ∝ corpus, the faiss sizing
     * rule — keeps it linear in n where brute is n². Measured
-    * (ScaleProbe `knnjoin`, occupancy 500, nProbe 3): 250k → 1M
+    * (PLANS.md R18 addendum 7, occupancy 500, nProbe 3): 250k → 1M
     * vectors moved candidates 403M → 2.06G (≈ linear; n² would be
     * 1e12, 486× more) and wall 38 s → 134 s on 32 local threads.
     *
@@ -956,7 +956,7 @@ object Similarity {
     * NearestCells routing the probe uses and PQ-encoded against the
     * EXISTING codebooks — one narrow map over the batch, then an
     * append into the cell-segmented layout. Cost ∝ batch, never
-    * corpus (ScaleProbe `annappend` measures it); resident vectors
+    * corpus (PLANS.md R7, the IVF append probe); resident vectors
     * are never reassigned or rewritten. Probes pick the rows up on
     * their next scan with no cache to invalidate: the session memo
     * holds only the index DIR, and both probe modes re-list the cell

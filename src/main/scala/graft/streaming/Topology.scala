@@ -137,7 +137,7 @@ object Bolts {
     * micro-batch is one narrow codegen'd filter (ThreadLocal-probed
     * unboxed binary search per row; the exact probe measured 5.5×
     * over the bloom path at 1B rows on a range-shaped dim —
-    * ScaleProbe `bitmap64`), where the bloom bolt must still
+    * PLANS.md R6 semi-join probe), where the bloom bolt must still
     * exact-join its might-contain sliver every batch. Sketch size is
     * the dial that picks between the two: run containers make a
     * range-shaped domain ~8 B per contiguous chunk (measured: 25M

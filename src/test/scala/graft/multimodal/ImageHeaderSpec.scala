@@ -68,27 +68,6 @@ class ImageHeaderSpec extends SparkSpecBase {
     assert(got == Set((1L, 2L, 2L), (1L, 4L, 0L), (2L, 4L, 2L)), s"got $got")
   }
 
-  test("hammingPairsChunked == hammingPairs across the chunk boundary (hot band)") {
-    import spark.implicits._
-    // 200 identical sigs (an all-black-frames bucket, > chunk=128 so
-    // the oversized-posting branch runs: same-chunk, cross-chunk and
-    // the small-posting path all exercised) + a diverse background
-    // with a couple of genuine near pairs
-    val hot = (0L until 200L).map(i => (i, -1L))
-    val bg = (200L until 400L).map(i => (i, i * 0x9e3779b97f4a7c15L))
-    val near = Seq((400L, 0x0123456789abcdefL), (401L, 0x0123456789abcdecL))
-    val sig = (hot ++ bg ++ near).toDF("doc_id", "sig")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val joined = pairs(Multimodal.hammingPairs(sig, maxHamming = 10))
-    val chunked = pairs(Multimodal.hammingPairsChunked(sig, maxHamming = 10))
-    assert(joined == chunked,
-      s"plans disagree: only-join=${joined -- chunked}, only-chunked=${chunked -- joined}")
-    // the hot clique is complete: 200*199/2 hamming-0 pairs
-    assert(joined.count(_._3 == 0L) >= 200 * 199 / 2)
-    assert(joined.contains((400L, 401L, 2L)))
-  }
-
   test("hammingPairsCollapsed: degenerate corpus bounded, clusters equal the full enumeration") {
     import spark.implicits._
     // the corpus that breaks the pair contract itself: 5000
