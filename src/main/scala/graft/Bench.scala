@@ -47,15 +47,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val warm = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    warm.sparkContext.setLogLevel("WARN")
+    val warm = HarnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "WARN",
+      "spark.sql.autoBroadcastJoinThreshold" -> "64m")
 
     def force(spark: SparkSession)(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

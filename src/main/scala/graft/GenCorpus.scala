@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a corpus `copies`× the size of a test-data directory by
@@ -19,14 +19,7 @@ object GenCorpus {
     val out = args.headOption.getOrElse(
       sys.error("usage: GenCorpus <outDir> [copies]"))
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "WARN")
     // per-copy key offsets, each above the source's key range
     val (kC, kS, kP, kO, kD, kV, kE) =
       (1000000L, 1000000L, 1000000L, 10000000L, 1000000L, 1000000L, 10000000L)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,14 +7,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet // optional key subset for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "WARN")
     new java.io.File(outDir).mkdirs()
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries

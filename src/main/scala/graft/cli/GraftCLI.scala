@@ -464,7 +464,7 @@ object GraftCLI {
         val genLine = graft.operators.IndexManifest.head(dir) match {
           case Some(h) =>
             s"generation ${h.gen} (${h.files.size} live files)"
-          case None => "pre-manifest layout (no generation log; first mutation adopts)"
+          case None => "no index manifest"
         }
         val cells = Similarity.ivfCellStats(spark, dir)
           .collect().map(r => (r.getInt(0), r.getLong(1)))

@@ -474,14 +474,12 @@ object GraftHashOps {
     }
   }
 
-  // 9-byte sketch header (r18): 8 magic bytes + the numHashes the
-  // sketch was BUILT with. The wire formats are structurally disjoint
-  // — raw legacy sketches are whole words (length ≡ 0 mod 8), headered
-  // ones ≡ 1 — so detection is exact, never a probabilistic sniff
-  // that could cost the no-false-negative contract. The header exists
-  // because a probe with the WRONG k reads bit positions the build
-  // never set and silently false-negatives present keys; with it,
-  // that mistake fails loudly instead.
+  // 9-byte sketch header: 8 magic bytes + the numHashes the sketch
+  // was BUILT with. The header exists because a probe with the WRONG
+  // k reads bit positions the build never set and silently
+  // false-negatives present keys; with it, that mistake fails loudly
+  // instead — as does a probe of bytes that are not a published
+  // sketch at all (no header).
   private val BloomMagic: Array[Byte] = "GRAFTBLM".getBytes("US-ASCII")
 
   def bloomBytesWithHeader(bits: Array[Long], numHashes: Int): Array[Byte] = {
@@ -493,7 +491,7 @@ object GraftHashOps {
     out
   }
 
-  /** The k a headered sketch was built with; None = legacy raw words. */
+  /** The k a headered sketch was built with; None = no header. */
   def bloomHeaderHashes(bloom: Array[Byte]): Option[Int] =
     if (bloom.length >= 9 && bloom.length % 8 == 1 &&
         java.util.Arrays.equals(java.util.Arrays.copyOf(bloom, 8), BloomMagic))
@@ -501,14 +499,13 @@ object GraftHashOps {
     else None
 
   def bloomMightContain(bloom: Array[Byte], key: Long, numHashes: Int): Boolean = {
-    val off = bloomHeaderHashes(bloom) match {
-      case Some(k) =>
-        if (k != numHashes) throw new IllegalArgumentException(
-          s"bloom probe numHashes=$numHashes != the sketch's built k=$k — " +
-            "a wrong-k probe would silently FALSE-NEGATIVE present keys")
-        9
-      case None => 0
-    }
+    val k = bloomHeaderHashes(bloom).getOrElse(throw new IllegalArgumentException(
+      s"bloom sketch of ${bloom.length} bytes has no GRAFTBLM header — " +
+        "only graft_bloom's published sketches can be probed"))
+    if (k != numHashes) throw new IllegalArgumentException(
+      s"bloom probe numHashes=$numHashes != the sketch's built k=$k — " +
+        "a wrong-k probe would silently FALSE-NEGATIVE present keys")
+    val off = 9
     val m = (bloom.length - off).toLong * 8
     val h1 = bloomH1(key)
     val h2 = bloomH2(key)

@@ -83,8 +83,7 @@ object IndexManifest {
   }
 
   /** The committed head, or None when this index has no manifest yet
-    * (the pre-manifest layout — callers fall back to their legacy
-    * read). The list-then-read retry covers the one benign race: a
+    * (never built). The list-then-read retry covers the one benign race: a
     * reader ≥ keepGens generations stale re-resolves instead of
     * failing on the reclaimed file.
     */
@@ -155,14 +154,12 @@ object IndexManifest {
     sys.error("unreachable")
   }
 
-  /** Append-only commit: `add` joins the live set computed over the
-    * head (or `legacyBase` for the first commit on a pre-manifest
-    * index — the adoption step). Never aborts.
+  /** Append-only commit: `add` joins the head's live set (empty when
+    * there is no head yet). Never aborts.
     */
-  def commitAppend(indexDir: String, add: Seq[String])(
-      legacyBase: => Seq[String]): Head =
+  def commitAppend(indexDir: String, add: Seq[String]): Head =
     commit(indexDir) { h =>
-      Some(h.map(_.files).getOrElse(legacyBase.toIndexedSeq) ++ add)
+      Some(h.map(_.files).getOrElse(IndexedSeq.empty) ++ add)
     }.get
 
   /** Replace-commit for maintenance: atomically swap `remove` for
@@ -172,10 +169,9 @@ object IndexManifest {
     * appends landing between stage and commit rebase transparently.
     */
   def commitReplace(indexDir: String, remove: Set[String],
-                    add: Seq[String])(
-      legacyBase: => Seq[String]): Option[Head] =
+                    add: Seq[String]): Option[Head] =
     commit(indexDir) { h =>
-      val base = h.map(_.files).getOrElse(legacyBase.toIndexedSeq)
+      val base = h.map(_.files).getOrElse(IndexedSeq.empty)
       val live = base.toSet
       if (!remove.forall(live.contains)) None
       else Some(base.filterNot(remove.contains) ++ add)

@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** The per-file Bloom sidecar: pointer-published segments (write-once
   * tokened parquet + one CommitStore putReplace), build, per-commit
@@ -32,95 +31,70 @@ trait MergeTableBloom { this: MergeTable.type =>
   /** Sidecar segment NAME: `_bloom-g<gen>~<k>b<numBits>~<col>`.
     * numBits rides the name (like numHashes) so maintenance folds
     * size FRESH sketches exactly as buildBloomIndex chose, even after
-    * the table emptied or mixed-size segments folded; legacy `~<k>~`
-    * names (pre-numBits) still parse with the size unknown. The name
-    * is the segment's logical identity: pointer-published segments
-    * (r14+) carry it as the pointer FILE name under `_bloomptr/`
-    * while their parquet lives in an immutable tokened dir; legacy
-    * segments carry it as the root DIRECTORY name.
+    * the table emptied or mixed-size segments folded. The name is
+    * the segment's logical identity: it is the pointer FILE name
+    * under `_bloomptr/`, while the parquet lives in an immutable
+    * tokened dir.
     */
   private def bloomNameOf(colName: String, gen: Int,
                           numHashes: Int, numBits: Int) =
     s"_bloom-g$gen~${numHashes}b$numBits~$colName"
 
   /** One committed sidecar segment. `dataDir` is where the sketch
-    * parquet actually lives — `<dir>/_bloomseg-<token>` when
-    * pointer-published (`pointed`), `<dir>/<name>` for a legacy
-    * pre-pointer segment.
+    * parquet lives: the `<dir>/_bloomseg-<token>` its pointer names.
     */
   private[operators] final case class BloomSeg(
       name: String, dataDir: String, gen: Int, k: Int,
-      bits: Option[Int], col: String, pointed: Boolean)
+      bits: Int, col: String)
 
   private[operators] def bloomPtrDirOf(dir: String): java.nio.file.Path =
     java.nio.file.Path.of(dir, "_bloomptr")
   private[operators] def bloomPtrOf(dir: String, name: String): java.nio.file.Path =
     bloomPtrDirOf(dir).resolve(name)
 
-  private def parseBloomName(n: String): Option[(Int, Int, Option[Int], String)] =
+  private def parseBloomName(n: String): Option[(Int, Int, Int, String)] =
     if (!n.startsWith("_bloom-g")) None
     else n.stripPrefix("_bloom-g").split("~", 3) match {
-      // staged names are `<committed name>.tmp<token>` (legacy dir
-      // staging) or `<committed name>.tmp-<nonce>` (the POSIX store's
-      // pointer staging) — the suffix lands in the column segment, so
-      // reject it explicitly or crashed staging would surface as a
-      // committed segment for a phantom column (folded every commit,
-      // reported in stats, copied by clones)
+      // the POSIX store stages a pointer as `<committed name>.tmp-<nonce>`
+      // — the suffix lands in the column segment, so reject it
+      // explicitly or crashed staging would surface as a committed
+      // segment for a phantom column (folded every commit, reported in
+      // stats, copied by clones)
       case Array(g, kb, c) if !c.contains(".tmp") =>
-        val (kStr, bits) = kb.indexOf('b') match {
-          case -1 => (kb, None)
-          case i  => (kb.take(i), kb.drop(i + 1).toIntOption)
+        kb.split("b", 2) match {
+          case Array(kStr, bStr) =>
+            for (gi <- g.toIntOption; ki <- kStr.toIntOption;
+                 bi <- bStr.toIntOption) yield (gi, ki, bi, c)
+          case _ => None
         }
-        for (gi <- g.toIntOption; ki <- kStr.toIntOption)
-          yield (gi, ki, bits, c)
       case _ => None
     }
 
   /** Every committed sidecar segment under `dir` — the one discovery
     * point shared by probes, folds, sweeps, stats and clones so the
-    * name/publication scheme lives in exactly one place. Two homes:
-    *
-    *  - POINTER-published (the CommitStore discipline): the segment
-    *    name is a file under `_bloomptr/` whose bytes name the
-    *    immutable tokened parquet dir. Publication was an atomic
-    *    [[CommitStore.putReplace]], so a reader sees the old or the
-    *    new pointer, never a torn one. A pointer whose target dir is
-    *    missing (crashed flip raced a vacuum, or the target was
-    *    vacuumed as an orphan) is skipped — degrades to uncovered-
-    *    admit, and vacuum reclaims the dangling pointer.
-    *  - LEGACY root dirs (`_bloom-g…` written by the pre-r14
-    *    staged-dir-rename publish): still discovered so existing
-    *    tables keep pruning; the next fold or rebuild republishes
-    *    them through the pointer and sweeps the dir.
-    *
-    * On a name collision the pointer wins: the same-generation
-    * rebuild's torn window (pointer flipped, legacy dir not yet
-    * swept) must resolve to the fresh segment.
+    * name/publication scheme lives in exactly one place. The segment
+    * name is a file under `_bloomptr/` whose bytes name the immutable
+    * tokened parquet dir. Publication was an atomic
+    * [[CommitStore.putReplace]], so a reader sees the old or the new
+    * pointer, never a torn one. A pointer whose target dir is missing
+    * (crashed flip raced a vacuum, or the target was vacuumed as an
+    * orphan) is skipped — degrades to uncovered-admit, and vacuum
+    * reclaims the dangling pointer.
     */
   private[operators] def bloomDirs(dir: String): Seq[BloomSeg] = {
     val st = store(dir)
-    val pointed = st.list(bloomPtrDirOf(dir)).flatMap { n =>
+    st.list(bloomPtrDirOf(dir)).flatMap { n =>
       parseBloomName(n).flatMap { case (g, k, b, c) =>
         st.read(bloomPtrOf(dir, n)) // None = swept mid-list
           .map(bytes => new String(bytes, "UTF-8").trim)
           .filter(_.nonEmpty)
-          .map(seg => BloomSeg(n, s"$dir/$seg", g, k, b, c, pointed = true))
+          .map(seg => BloomSeg(n, s"$dir/$seg", g, k, b, c))
           // target gone = crashed flip or vacuumed orphan; the pointer
           // is reclaimed by vacuum, the probe falls back to uncovered
           .filter(s => java.nio.file.Files.exists(
             java.nio.file.Path.of(s.dataDir)))
       }
     }
-    val root = java.nio.file.Path.of(dir)
-    val legacy = if (!java.nio.file.Files.exists(root)) Nil else {
-      val ls = java.nio.file.Files.list(root)
-      val names = try ls.iterator().asScala.map(_.getFileName.toString).toSeq
-                  finally ls.close()
-      names.flatMap(n => parseBloomName(n).map { case (g, k, b, c) =>
-        BloomSeg(n, s"$dir/$n", g, k, b, c, pointed = false) })
-    }
-    val pointedNames = pointed.map(_.name).toSet
-    pointed ++ legacy.filterNot(s => pointedNames.contains(s.name))
   }
 
   /** Publish a segment: flip its pointer to `dataName` through the
@@ -156,7 +130,7 @@ trait MergeTableBloom { this: MergeTable.type =>
     */
   private[operators] def dropBloomSeg(dir: String, seg: BloomSeg,
                            keepPtr: Boolean = false): Unit = {
-    if (seg.pointed && !keepPtr) { store(dir).delete(bloomPtrOf(dir, seg.name)); () }
+    if (!keepPtr) { store(dir).delete(bloomPtrOf(dir, seg.name)); () }
     graft.IndexLifecycle.deleteRecursively(seg.dataDir)
   }
 
@@ -256,7 +230,7 @@ trait MergeTableBloom { this: MergeTable.type =>
         // mutual-delete risk of two concurrent same-column rebuilds
         // rides the already-documented don't-schedule-concurrent-
         // rebuilds window above
-        (t.gen == gen && t.k == numHashes && !t.bits.contains(numBits)) ||
+        (t.gen == gen && t.k == numHashes && t.bits != numBits) ||
         t.name == segName)
     publishBloomSeg(dir, segName, dataName)
     superseded.foreach(seg =>
@@ -285,8 +259,7 @@ trait MergeTableBloom { this: MergeTable.type =>
     * the newest segment's dir name, so fresh sketches are sized
     * exactly as the build chose; existing entries carry their own
     * byte length per-row, so segments built at different sizes still
-    * fold (a legacy pre-numBits name sizes fresh sketches by the
-    * LARGEST sketch in the fold frame). A segment with a DIFFERENT
+    * fold. A segment with a DIFFERENT
     * numHashes (crashed rebuild that changed k) is left alive, not
     * swept — probes consult every k-family, so its coverage keeps
     * pruning instead of silently decaying to admit-all.
@@ -310,7 +283,7 @@ trait MergeTableBloom { this: MergeTable.type =>
         // deterministic on a same-generation tie (crashed k-change
         // rebuild): highest k wins, so repeated folds pick ONE family
         val newest = colSegs.maxBy(t => (t.gen, t.k))
-        val (newestGen, k, recordedBits) = (newest.gen, newest.k, newest.bits)
+        val (newestGen, k, bits) = (newest.gen, newest.k, newest.bits)
         if (newestGen < newGen) {
           // the fold family is the newest segment's numHashes — a
           // DIFFERENT-k segment (crashed rebuild that changed k) can't
@@ -326,25 +299,8 @@ trait MergeTableBloom { this: MergeTable.type =>
           // but don't let duplicates compound through repeated folds
           val old = foldDf.join(broadcast(liveDf), Seq("path"), "left_semi")
             .dropDuplicates("path")
-          // fresh-sketch numBits: the size buildBloomIndex recorded in
-          // the newest segment's name; a legacy pre-numBits name falls
-          // back to the LARGEST sketch in the fold frame (bits = 8 ×
-          // bytes — max, not an arbitrary first row, so mixed-size
-          // segments never undersize new files), and only an empty
-          // legacy segment (fully-deleted table) uses the build default
-          lazy val resolvedBits: Int = recordedBits.getOrElse {
-            val r = foldDf.agg(max(length(col("bloom")))).head()
-            if (r.isNullAt(0)) 1 << 17
-            else {
-              // r18 headered sketches carry a 9-byte (magic + k)
-              // prefix; lengths ≡ 1 (mod 8) are headered, raw
-              // otherwise — sizing off the raw header-included length
-              // would compute a non-power-of-two numBits and crash
-              // the fresh-sketch build
-              val len = r.getInt(0)
-              (if (len % 8 == 1) len - 9 else len) * 8
-            }
-          }
+          // fresh sketches are sized by the numBits buildBloomIndex
+          // recorded in the newest segment's name
           // case-insensitive like Spark's own resolution (and like the
           // probe side's type lookup) — a sidecar on 'Tag' must still
           // fold when the staged schema spells it 'tag'
@@ -352,11 +308,11 @@ trait MergeTableBloom { this: MergeTable.type =>
             df.select(input_file_name().as("path"),
                 xxhash64(col(c)).as("__h"))
               .groupBy("path")
-              .agg(graft.functions.GraftFunctions.bloomAgg("__h", resolvedBits, k)
+              .agg(graft.functions.GraftFunctions.bloomAgg("__h", bits, k)
                 .as("bloom"))
           }
           val folded = fresh.fold(old)(f => old.unionByName(f))
-          val segName = bloomNameOf(c, newGen, k, resolvedBits)
+          val segName = bloomNameOf(c, newGen, k, bits)
           val dataName = s"_bloomseg-${newToken()}"
           folded.write.parquet(s"$dir/$dataName")
           publishBloomSeg(dir, segName, dataName)

@@ -113,7 +113,7 @@ trait MergeTableDml { this: MergeTable.type =>
     // mid-copy leaves an unpublished orphan, never a torn segment)
     bloomDirs(srcDir).groupBy(t => (t.col, t.k)).values
       .map(_.maxBy(_.gen)).foreach { seg =>
-        // keep the name's k/numBits segment verbatim (legacy names too)
+        // keep the name's k/numBits segment verbatim
         val dstName = seg.name.replaceFirst("^_bloom-g\\d+", "_bloom-g0")
         val dataName = s"_bloomseg-${newToken()}"
         try {

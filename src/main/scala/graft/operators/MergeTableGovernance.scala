@@ -300,9 +300,7 @@ trait MergeTableGovernance { this: MergeTable.type =>
           oldEnough(p)) {
         // a crashed constraint/drop-column/horizon staged file —
         // never observed by readers (checkpoint staging lives only
-        // under _log/ and is swept by that branch). The `.tmp-`
-        // segment may follow the bare base (legacy staging) or a
-        // versioned name (the POSIX store stages `<final>.tmp-<n>`).
+        // under _log/ and is swept by that branch).
         del(p); deleted += 1
       } else if (governMax.exists { case (b, mx) =>
           name.startsWith(s"$b-v") &&
@@ -310,14 +308,6 @@ trait MergeTableGovernance { this: MergeTable.type =>
           oldEnough(p)) {
         // superseded governance-log version (current one is kept)
         del(p); deleted += 1
-      } else if (governMax.contains(name) && oldEnough(p)) {
-        // legacy un-versioned governance file superseded by the log
-        del(p); deleted += 1
-      } else if (name.startsWith("_bloom-g") && name.contains(".tmp") &&
-          oldEnough(p)) {
-        // a crashed pre-r14 buildBloomIndex's staged sidecar dir
-        // (committed legacy sidecars have no .tmp segment and are kept)
-        graft.IndexLifecycle.deleteRecursively(p.toString); deleted += 1
       } else if (name.startsWith("_bloomseg-") && !bloomRefs.contains(name) &&
           orphanOldEnough(p)) {
         // an unreferenced sidecar data dir (see bloomRefs above) — on
@@ -404,8 +394,8 @@ trait MergeTableGovernance { this: MergeTable.type =>
   // never replaces an existing name, so of two racing writers exactly
   // ONE wins and the loser retries its TRANSFORM on the fresh state; a
   // lost update is impossible. Old versions are left for [[vacuum]]
-  // (a reader may still be mid-read); a legacy un-versioned `<base>`
-  // file reads as version 0 and is superseded by the first CAS write.
+  // (a reader may still be mid-read). No version file yet reads as
+  // version 0 with empty content.
 
   private def governFileOf(dir: String, base: String, v: Int) =
     java.nio.file.Path.of(dir, s"$base-v$v")
@@ -422,10 +412,7 @@ trait MergeTableGovernance { this: MergeTable.type =>
   private[operators] def governRead(dir: String, base: String): (Int, String) = {
     while (true) {
       val vs = governVersions(dir, base)
-      if (vs.isEmpty) {
-        val legacy = java.nio.file.Path.of(dir, base)
-        return (0, store(dir).read(legacy).map(new String(_, "UTF-8")).getOrElse(""))
-      }
+      if (vs.isEmpty) return (0, "")
       store(dir).read(governFileOf(dir, base, vs.max)) match {
         case Some(b) => return (vs.max, new String(b, "UTF-8"))
         case None    => () // swept under the read: retry
@@ -444,10 +431,9 @@ trait MergeTableGovernance { this: MergeTable.type =>
     while (true) {
       val (v, cur) = governRead(dir, base)
       val next = f(cur)
-      // no-op: nothing to publish (at v0 only when there is also no
-      // legacy content worth superseding — e.g. cloning an
-      // ungoverned table must not scatter empty version files)
-      if (next == cur && (v > 0 || next.isEmpty)) return next
+      // no-op: nothing to publish (e.g. cloning an ungoverned table
+      // must not scatter empty version files)
+      if (next == cur) return next
       if (store(dir).putIfAbsent(governFileOf(dir, base, v + 1),
           next.getBytes("UTF-8")))
         return next

@@ -29,12 +29,7 @@ trait MergeTableLog { this: MergeTable.type =>
   // dirs and small aux files — listings stay flat forever, and the
   // log itself is never listed on the hot path (committedGen probes
   // the dense tail by name; history/metaAt read by generation
-  // number). Pre-`_log` tables keep working: reads fall back to
-  // root-level markers, and the listing fallback merges both
-  // locations. Mixed-version WRITERS are not supported (an old
-  // binary's root link and a new binary's _log link could both win
-  // one generation) — upgrade quiesced, the standard table-format
-  // protocol-bump discipline.
+  // number).
 
   private[operators] def logDirOf(dir: String) = java.nio.file.Path.of(dir, "_log")
 
@@ -45,24 +40,12 @@ trait MergeTableLog { this: MergeTable.type =>
     */
   private[operators] def store(dir: String): CommitStore = CommitStore.forDir(dir)
 
-  /** Canonical (v2) marker path — the link target for new commits. */
+  /** A generation's commit marker — the link target of its CAS. */
   private def markerOf(dir: String, gen: Int) =
     logDirOf(dir).resolve(s"_commit-g$gen")
 
-  private def legacyMarkerOf(dir: String, gen: Int) =
-    java.nio.file.Path.of(dir, s"_commit-g$gen")
-
-  /** Where to READ a generation's marker: the `_log/` path when
-    * present, the pre-`_log` root path otherwise.
-    */
-  private def markerReadPath(dir: String, gen: Int): java.nio.file.Path = {
-    val v2 = markerOf(dir, gen)
-    if (store(dir).exists(v2)) v2 else legacyMarkerOf(dir, gen)
-  }
-
   private def markerExists(dir: String, gen: Int): Boolean =
-    store(dir).exists(markerOf(dir, gen)) ||
-      store(dir).exists(legacyMarkerOf(dir, gen))
+    store(dir).exists(markerOf(dir, gen))
 
   /** The newest committed generation. Fast path: the `_last_checkpoint`
     * pointer names a rolled-up generation, and generations are DENSE
@@ -73,25 +56,17 @@ trait MergeTableLog { this: MergeTable.type =>
     * pointer (crashed checkpoint writer, lost pointer race) only
     * lengthens the probe, never changes the answer.
     */
-  def committedGen(dir: String): Option[Int] = {
-    val p = java.nio.file.Path.of(dir)
-    if (!java.nio.file.Files.exists(p)) None
-    else lastCheckpointGen(dir) match {
+  def committedGen(dir: String): Option[Int] =
+    lastCheckpointGen(dir) match {
       case Some(ck) =>
         var g = ck
         while (markerExists(dir, g + 1)) g += 1
         Some(g)
       case None =>
-        def gensIn(d: java.nio.file.Path): Seq[Int] =
-          store(dir).list(d)
-            .filter(_.matches("_commit-g\\d+"))
-            .map(_.stripPrefix("_commit-g").toInt)
-        // both locations: a pre-_log table upgraded mid-life carries
-        // its early generations in the root and the rest in _log/
-        val gens = gensIn(logDirOf(dir)) ++ gensIn(p)
-        if (gens.isEmpty) None else Some(gens.max)
+        store(dir).list(logDirOf(dir))
+          .filter(_.matches("_commit-g\\d+"))
+          .map(_.stripPrefix("_commit-g").toInt).maxOption
     }
-  }
 
   /** One commit-log entry's `k=v` lines (always includes `token`;
     * the streaming upsert sink's batch watermark rides here too, so
@@ -110,7 +85,7 @@ trait MergeTableLog { this: MergeTable.type =>
     }
 
   def metaAt(dir: String, gen: Int): Map[String, String] =
-    readKvFile(store(dir), markerReadPath(dir, gen))
+    readKvFile(store(dir), markerOf(dir, gen))
 
   def committedMeta(dir: String): Map[String, String] =
     committedGen(dir).map(metaAt(dir, _)).getOrElse(Map.empty)

@@ -32,35 +32,25 @@ object SegmentPointer {
     */
   def newSegName(prefix: String): String = prefix + WriterToken.next()
 
-  /** The marker's raw trimmed body, if the marker exists. Callers with
-    * legacy marker forms (writeShards' "committed") branch on this.
-    */
-  def markerBody(root: String, marker: String): Option[String] =
+  /** The marker's raw trimmed body, if the marker exists. */
+  private[operators] def markerBody(root: String, marker: String): Option[String] =
     store(root).read(markerPath(root, marker))
       .map(b => new String(b, "UTF-8").trim)
 
-  /** Validate a marker BODY into a committed segment name: it must
-    * carry the segment prefix, be a SINGLE path element (the class
-    * invariant the name-compared sweep relies on — a path-shaped body,
-    * whether a caller bug or a corrupted marker, must read as
-    * unresolvable, never alias a live dir out of the sweep's keep
-    * set), and name an existing dir under `root`. Shared by
-    * [[resolveName]] and callers that already hold the body (one
-    * store read, not two).
+  /** The committed segment NAME: the marker body, when it carries the
+    * segment prefix, is a SINGLE path element (the class invariant
+    * the name-compared sweep relies on — a path-shaped body, whether a
+    * caller bug or a corrupted marker, must read as unresolvable,
+    * never alias a live dir out of the sweep's keep set), and names
+    * an existing dir under `root` (a dangling pointer — segment swept
+    * mid-replay — resolves to None, never to a half-artifact).
     */
-  def resolveBody(root: String, body: String, prefix: String): Option[String] =
-    Some(body)
+  def resolveName(root: String, marker: String, prefix: String): Option[String] =
+    markerBody(root, marker)
       .filter(_.startsWith(prefix))
       .filter(n => !n.contains('/') && !n.contains('\\'))
       .filter(n => java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(root, n)))
-
-  /** The committed segment NAME: the marker body, when [[resolveBody]]
-    * accepts it (a dangling pointer — segment swept mid-replay —
-    * resolves to None, never to a half-artifact).
-    */
-  def resolveName(root: String, marker: String, prefix: String): Option[String] =
-    markerBody(root, marker).flatMap(resolveBody(root, _, prefix))
 
   /** Publish `segName`: the atomic flip. A crash before leaves the old
     * marker (fresh segment = orphan); after, the new segment is live.

@@ -235,9 +235,7 @@ object Pipeline {
     * leaves no marker (the orphan segment is swept by the next
     * replay); a crash after it leaves a complete committed output. A
     * replay against a committed dir is a no-op returning the manifest;
-    * determinism makes a from-scratch rewrite byte-stable. Legacy
-    * pre-r15 dirs (marker body "committed", data at the root) are
-    * still resolved by [[shardDataRoot]].
+    * determinism makes a from-scratch rewrite byte-stable.
     */
   def writeShards(s: SparkSession, d: String, outDir: String,
                   shardSize: Int = 128): DataFrame =
@@ -260,10 +258,8 @@ object Pipeline {
     }
     // not committed: whatever exists is crash debris — a dangling
     // marker (segment swept mid-replay) goes FIRST so no reader can
-    // resolve a half-cleaned dir, then the debris (legacy staging,
-    // orphan segments, legacy partial output)
+    // resolve a half-cleaned dir, then the debris (orphan segments)
     SegmentPointer.dropMarker(outDir, "_committed")
-    graft.IndexLifecycle.deleteRecursively(outDir + ".staging")
     graft.IndexLifecycle.deleteRecursively(outDir)
     val seg = SegmentPointer.newSegName("_shardseg-")
     val segRoot = s"$outDir/$seg"
@@ -305,36 +301,24 @@ object Pipeline {
     s.read.parquet(s"$segRoot/manifest")
   }
 
-  /** Resolve a shard dir's committed data root — the directory holding
-    * `manifest/` + `shards/` — or None when `outDir` is uncommitted
-    * (no marker, or a dangling pointer whose segment was swept). Two
-    * marker forms: r15+ pointer bytes name a `_shardseg-` dir; the
-    * legacy body ("committed") published `outDir` itself. The one
-    * discovery point shared by [[writeShards]]'s replay check,
-    * [[readShards]] and the specs, so the publication scheme lives in
-    * exactly one place (the [[graft.operators.MergeTableBloom]]
-    * bloomDirs pattern).
+  /** Resolve a shard dir's committed data root — the `_shardseg-`
+    * dir the `_committed` marker names, holding `manifest/` +
+    * `shards/` — or None when `outDir` is uncommitted (no marker, a
+    * dangling pointer whose segment was swept, or a body that names
+    * no `_shardseg-` dir, so replay rewrites it). The one discovery
+    * point shared by [[writeShards]]'s replay check, [[readShards]]
+    * and the specs, so the publication scheme lives in exactly one
+    * place (the [[graft.operators.MergeTableBloom]] bloomDirs
+    * pattern).
     */
-  def shardDataRoot(outDir: String): Option[String] = {
-    import graft.operators.SegmentPointer
-    // ONE marker read: the branch decision and the resolution must see
-    // the same body (and an object-store CommitStore pays one GET)
-    SegmentPointer.markerBody(outDir, "_committed").flatMap {
-      case seg if seg.startsWith("_shardseg-") =>
-        SegmentPointer.resolveBody(outDir, seg, "_shardseg-")
-          .map(n => s"$outDir/$n")
-      // ONLY the exact legacy body commits the root itself; any other
-      // body (empty, truncated, corrupted) is unresolvable — same
-      // posture as a dangling pointer, so replay rewrites it rather
-      // than serving whatever sits at the root
-      case "committed" => Some(outDir)
-      case _           => None
-    }
-  }
+  def shardDataRoot(outDir: String): Option[String] =
+    graft.operators.SegmentPointer
+      .resolveName(outDir, "_committed", "_shardseg-")
+      .map(n => s"$outDir/$n")
 
   /** pp12: the WRITTEN manifest — pp08's numbers re-read from the
     * crash-safe physical artifact [[writeShards]] produces, which
-    * puts the writer itself (staging, rename-commit, shard files)
+    * puts the writer itself (segment write, pointer flip, shard files)
     * under the driver's DuckDB hash gate: a writer bug that drifted
     * the on-disk artifact from the declarative manifest fails this
     * row. Each call clears the derived output dir first, so the gate
@@ -379,7 +363,6 @@ object Pipeline {
         "-p" + ProcessHandle.current().pid() +
         "-s" + java.lang.Integer.toHexString(System.identityHashCode(s))).toString
     graft.IndexLifecycle.deleteRecursively(out)
-    graft.IndexLifecycle.deleteRecursively(out + ".staging")
     writeShards(s, d, out).orderBy("shard")
   }
 

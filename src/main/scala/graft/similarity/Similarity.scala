@@ -180,8 +180,8 @@ object Similarity {
   // [[graft.operators.IndexManifest]] (`indexDir/_gens/g<N>`,
   // CAS-committed via the CommitStore) — the same write-once +
   // pointer-flip publication MergeTable, the sinks and the shard
-  // writer ride. What this buys over the pre-r18 "append straight
-  // into cell dirs + quiesced maintenance" layout:
+  // writer ride. What this buys over appending straight into shared
+  // cell dirs under quiesced maintenance:
   //
   //  - concurrent appends never share a Spark output dir (each writes
   //    its own seg), so two ingest writers can't cross-commit each
@@ -203,15 +203,12 @@ object Similarity {
   //    layer, deliberately not duplicated here.
   //
   // Cell pruning moves from Hive-style partition discovery to the
-  // MANIFEST: each file's cell is in its path (`pcell=K`, or `cell=K`
-  // for adopted pre-manifest files), so a probe selects the files of
-  // its probed cells before Spark ever lists anything. Inside the
-  // file bytes the cell rides as a REAL column (duplicated into the
-  // `pcell` partition dir at write time), so manifest-selected files
-  // read plainly, with no basePath/partition-inference coupling.
-  // Pre-manifest indexes (flat `cell=K/` dirs) keep reading through
-  // the legacy dir scan until their first mutation ADOPTS them: the
-  // mutator's first commit lists the legacy files as generation 0.
+  // MANIFEST: each file's cell is in its path (`pcell=K`), so a
+  // probe selects the files of its probed cells before Spark ever
+  // lists anything. Inside the file bytes the cell rides as a REAL
+  // column (duplicated into the `pcell` partition dir at write time),
+  // so manifest-selected files read plainly, with no
+  // basePath/partition-inference coupling.
 
   private def vectorsRoot(indexDir: String) = s"$indexDir/vectors"
 
@@ -219,15 +216,16 @@ object Similarity {
     * points at: the tokened `trained-<t>` dir named by the head's
     * manifest metadata — versioned INTO the manifest CAS (r18) so a
     * probe can never pair one generation's codebooks with another's
-    * vectors — or the index root for legacy indexes whose artifacts
-    * live unversioned beside the layout.
+    * vectors. Raises when the index has no manifest (never built).
     */
   def trainedDir(indexDir: String): String =
     trainedDirOf(indexDir, graft.operators.IndexManifest.head(indexDir))
 
   private def trainedDirOf(indexDir: String,
                            head: Option[graft.operators.IndexManifest.Head]): String =
-    trainedNameOf(head).map(t => s"$indexDir/$t").getOrElse(indexDir)
+    trainedNameOf(head).map(t => s"$indexDir/$t").getOrElse(
+      throw new IllegalStateException(
+        s"$indexDir has no index manifest naming trained artifacts"))
 
   private def trainedNameOf(
       head: Option[graft.operators.IndexManifest.Head]): Option[String] =
@@ -243,13 +241,11 @@ object Similarity {
   }
 
   /** The cell a manifest entry's file holds, parsed from its path
-    * (`seg-<t>/pcell=K/…` for manifest-era files, `cell=K/…` for
-    * adopted pre-manifest files).
+    * (`seg-<t>/pcell=K/…`).
     */
   private[graft] def cellOfPath(rel: String): Int =
     rel.split('/').collectFirst {
       case seg if seg.startsWith("pcell=") => seg.substring(6).toInt
-      case seg if seg.startsWith("cell=") => seg.substring(5).toInt
     }.getOrElse(sys.error(s"manifest entry without a cell segment: $rel"))
 
   /** Write `rows` (vectorCols-shaped) as a fresh writer-private
@@ -297,52 +293,18 @@ object Similarity {
     false
   }
 
-  /** The pre-manifest layout's live files (parquet parts under the
-    * flat `cell=K` dirs), relative to the vectors root — the adoption
-    * base for the first manifest commit on an old index, and the
-    * legacy read set.
-    */
-  private def legacyVectorFiles(indexDir: String): Seq[String] = {
-    import java.nio.file.{Files, Path}
-    import scala.jdk.CollectionConverters._
-    val root = Path.of(vectorsRoot(indexDir))
-    if (!Files.isDirectory(root)) return Nil
-    val ls = Files.list(root)
-    val cells = try ls.iterator().asScala
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("cell="))
-      .toIndexedSeq
-    finally ls.close()
-    cells.flatMap { c =>
-      val fl = Files.list(c)
-      try fl.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toIndexedSeq
-      finally fl.close()
-    }
-  }
-
   private def readVectorFiles(s: SparkSession, indexDir: String,
                               files: Seq[String]): DataFrame = {
     val root = vectorsRoot(indexDir)
-    // adopted pre-manifest files carry cell only in their dir name →
-    // read them with basePath so the partition column materializes;
-    // manifest-era files carry cell in their bytes → read plainly
-    val (legacy, seg) = files.partition(_.startsWith("cell="))
-    val parts = Seq(
-      Option.when(legacy.nonEmpty)(
-        s.read.option("basePath", root).parquet(legacy.map(f => s"$root/$f"): _*)
-          .select(vectorCols.map(col): _*)),
-      Option.when(seg.nonEmpty)(
-        s.read.parquet(seg.map(f => s"$root/$f"): _*)
-          .select(vectorCols.map(col): _*))).flatten
-    parts.reduceOption(_.unionByName(_)).getOrElse(
-      s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), vectorSchema))
+    if (files.isEmpty)
+      s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), vectorSchema)
+    else s.read.parquet(files.map(f => s"$root/$f"): _*)
+      .select(vectorCols.map(col): _*)
   }
 
   /** THE read path for the vector layout: the committed manifest's
     * files, pruned to `cells` at the manifest (no listing, no
-    * partition discovery); pre-manifest indexes fall back to the
-    * legacy dir scan with an in-plan cell filter.
+    * partition discovery). An index with no manifest reads empty.
     */
   def indexVectors(s: SparkSession, indexDir: String,
                    cells: Option[Seq[Int]] = None): DataFrame =
@@ -357,31 +319,16 @@ object Similarity {
     */
   private def indexVectorsPinned(s: SparkSession, indexDir: String,
                                  head: Option[graft.operators.IndexManifest.Head],
-                                 cells: Option[Seq[Int]]): DataFrame =
-    head match {
-      case Some(h) =>
-        val picked = cells match {
-          case Some(cs) =>
-            val want = cs.toSet
-            h.files.filter(f => want.contains(cellOfPath(f)))
-          case None => h.files
-        }
-        readVectorFiles(s, indexDir, picked)
-      case None =>
-        // pre-manifest fallback: read the LEGACY FILE SET, not the
-        // raw root — a staged seg-* dir beside the flat cell= layout
-        // (an in-flight or crashed first mutation) would otherwise
-        // break partition discovery for every probe, or worse leak
-        // the crashed writer's uncommitted rows into a live read
-        val files = legacyVectorFiles(indexDir)
-        val picked = cells match {
-          case Some(cs) =>
-            val want = cs.toSet
-            files.filter(f => want.contains(cellOfPath(f)))
-          case None => files
-        }
-        readVectorFiles(s, indexDir, picked)
+                                 cells: Option[Seq[Int]]): DataFrame = {
+    val files = head.map(_.files).getOrElse(IndexedSeq.empty)
+    val picked = cells match {
+      case Some(cs) =>
+        val want = cs.toSet
+        files.filter(f => want.contains(cellOfPath(f)))
+      case None => files
     }
+    readVectorFiles(s, indexDir, picked)
+  }
 
   /** Retire previously-REFERENCED data files after a successful
     * manifest swap: leave the bytes on disk for
@@ -426,8 +373,8 @@ object Similarity {
   /** Reclaim data files no manifest references — crashed appends,
     * maintenance losers, and retire-window leftovers — older than
     * `graceMs` (which must exceed the longest in-flight write: a
-    * younger unreferenced file may be a commit in progress). A
-    * pre-manifest index has no referenced-set to judge against and
+    * younger unreferenced file may be a commit in progress). An index
+    * with no manifest has no referenced-set to judge against and
     * sweeps nothing. Returns the number of parquet files reclaimed.
     */
   def sweepUncommittedVectorFiles(indexDir: String,
@@ -559,8 +506,7 @@ object Similarity {
     // ONE commit publishes vectors + trained pointer, fenced on the
     // entry generation: the swap lands only if NOTHING committed
     // during the rebuild
-    val prev = startHead.map(_.files)
-      .getOrElse(legacyVectorFiles(indexDir).toIndexedSeq)
+    val prev = startHead.map(_.files).getOrElse(IndexedSeq.empty)
     graft.operators.IndexManifest.commitWithMeta(indexDir) { cur =>
       if (cur.map(_.gen) != startHead.map(_.gen)) None
       else Some((mine, Map("trained" -> trainedName)))
@@ -580,29 +526,20 @@ object Similarity {
     }
   }
 
-  /** Retire a superseded generation's trained artifacts: its tokened
-    * dir, or the legacy root-level `centroids`/`pqbooks` when the
-    * superseded head predated versioned artifacts. Runs AFTER the
-    * swap — a reader pinned to the old head races only this physical
-    * delete (the documented window).
+  /** Retire a superseded generation's trained artifacts (its tokened
+    * dir). Runs AFTER the swap — a reader pinned to the old head races
+    * only this physical delete (the documented window).
     */
   private def retireTrained(indexDir: String,
                             prevHead: Option[graft.operators.IndexManifest.Head]): Unit =
-    trainedNameOf(prevHead) match {
-      case Some(t) =>
-        // retire like the vector layout: a probe that pinned the
-        // pre-rebuild head still loads these centroids/codebooks —
-        // restart the dir's grace clock and let the sweep (which
-        // already reclaims unreferenced trained-* dirs) collect it
-        scala.util.Try(java.nio.file.Files.setLastModifiedTime(
-          java.nio.file.Path.of(s"$indexDir/$t"),
-          java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())))
-        ()
-      case None =>
-        // pre-manifest legacy artifacts: no sweep knows these names,
-        // and the legacy contract is quiesced — delete immediately
-        graft.IndexLifecycle.deleteRecursively(s"$indexDir/centroids")
-        graft.IndexLifecycle.deleteRecursively(s"$indexDir/pqbooks")
+    trainedNameOf(prevHead).foreach { t =>
+      // retire like the vector layout: a probe that pinned the
+      // pre-rebuild head still loads these centroids/codebooks —
+      // restart the dir's grace clock and let the sweep (which
+      // already reclaims unreferenced trained-* dirs) collect it
+      scala.util.Try(java.nio.file.Files.setLastModifiedTime(
+        java.nio.file.Path.of(s"$indexDir/$t"),
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())))
     }
 
   private def loadPqBooks(s: SparkSession, indexDir: String,
@@ -923,10 +860,11 @@ object Similarity {
   // and a half-built dir from a failed build is cleaned up rather
   // than leaked — both behaviors the shared lifecycle standardizes.
   private val ivfLife = new graft.IndexLifecycle[String]("ann02-ivf-index",
-    // the trained artifacts live where the committed head says (the
-    // tokened trained-<t> dir since r18; the index root pre-manifest)
-    validate = (_, dir) => java.nio.file.Files.exists(
-      java.nio.file.Path.of(trainedDir(dir), "centroids")) &&
+    // the trained artifacts live where the committed head says (a
+    // deleted dir has no head, so it re-validates as missing)
+    validate = (_, dir) =>
+      trainedNameOf(graft.operators.IndexManifest.head(dir)).exists(t =>
+        java.nio.file.Files.exists(java.nio.file.Path.of(dir, t, "centroids"))) &&
       java.nio.file.Files.exists(java.nio.file.Path.of(dir, "vectors")),
     release = (_, dir) => graft.IndexLifecycle.deleteRecursively(dir))
 
@@ -1002,8 +940,7 @@ object Similarity {
       if (mine.isEmpty) return
       val committed = graft.operators.IndexManifest.commit(indexDir) { cur =>
         if (trainedNameOf(cur) != trainedNameOf(pinned)) None
-        else Some(cur.map(_.files)
-          .getOrElse(legacyVectorFiles(indexDir).toIndexedSeq) ++ mine)
+        else Some(cur.map(_.files).getOrElse(IndexedSeq.empty) ++ mine)
       }
       if (committed.isDefined) return
       deleteVectorFiles(indexDir, mine) // retrained under us: re-encode
@@ -1084,7 +1021,7 @@ object Similarity {
     while (attempt < 5) {
       attempt += 1
       val live = graft.operators.IndexManifest.head(indexDir).map(_.files)
-        .getOrElse(legacyVectorFiles(indexDir).toIndexedSeq)
+        .getOrElse(IndexedSeq.empty)
       val frag = live.groupBy(cellOfPath).filter(_._2.size >= minFiles)
       if (frag.isEmpty) return Seq.empty
       val inputs = frag.valuesIterator.flatten.toIndexedSeq
@@ -1103,7 +1040,7 @@ object Similarity {
         case None => // inputs retired under us: loop re-resolves
         case Some(mine) =>
           graft.operators.IndexManifest.commitReplace(indexDir,
-            inputs.toSet, mine)(legacyVectorFiles(indexDir)) match {
+            inputs.toSet, mine) match {
             case Some(_) =>
               // retire the fragments AFTER the swap landed — bytes
               // stay on disk under a fresh grace clock so a reader
@@ -1223,8 +1160,7 @@ object Similarity {
     while (attempt < 8) {
       attempt += 1
       val pinned = graft.operators.IndexManifest.head(indexDir)
-      val live = pinned.map(_.files)
-        .getOrElse(legacyVectorFiles(indexDir).toIndexedSeq)
+      val live = pinned.map(_.files).getOrElse(IndexedSeq.empty)
       // discovery: ONE narrow (vec_id, cell) scan — at production
       // dims the full-width rewrite dwarfs this by the row-width
       // ratio. The id-range pre-filter is free and lets parquet
@@ -1254,7 +1190,7 @@ object Similarity {
               graft.operators.IndexManifest.commit(indexDir) { cur =>
                 if (cur.map(_.gen) == Some(h.gen)) Some(h.files) else None
               }.isDefined
-            case None => true // pre-manifest: the quiesced legacy contract
+            case None => true // no manifest: no vectors to carry an id
           }
           if (fenced) {
             clearSnapshot()
@@ -1272,7 +1208,7 @@ object Similarity {
             catch { case t: Throwable if vanishedFiles(t) => None }
           staged.foreach { mine =>
             graft.operators.IndexManifest.commitReplace(indexDir,
-              old.toSet, mine)(legacyVectorFiles(indexDir)) match {
+              old.toSet, mine) match {
               case Some(_) =>
                 // retire AFTER the swap; a cell whose every row was
                 // tombstoned simply leaves the manifest

@@ -170,9 +170,8 @@ object Sources {
     * [[graft.operators.CommitStore.putReplace]] — is the pointer
     * readers resolve through [[readCompacted]]/[[compactedDataDir]].
     * A concurrent reader therefore sees the old or the new
-    * generation, never a missing directory (the pre-r15 two-rename
-    * swap's documented gap), and on an object store the commit is a
-    * single PUT instead of a directory copy. Crash-safety: before
+    * generation, never a missing directory, and on an object store
+    * the commit is a single PUT instead of a directory copy. Crash-safety: before
     * the flip the live data is untouched and the fresh generation is
     * an orphan the next compaction sweeps; after it the superseded
     * generation (or the migrated plain dir's root files) is the
@@ -215,31 +214,8 @@ object Sources {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     import graft.operators.SegmentPointer
-    def visibleData(p: java.nio.file.Path): Boolean =
-      Files.isDirectory(p) && {
-        val ls = Files.list(p)
-        try ls.iterator().asScala.exists { e =>
-          val n = e.getFileName.toString
-          !n.startsWith("_") && !n.startsWith(".")
-        } finally ls.close()
-      }
     val liveSeg = SegmentPointer.resolveName(path, "_head", "_gen-")
     val live = liveSeg.map(n => s"$path/$n").getOrElse(path)
-    // a pre-r15 compact() could die between its two directory renames,
-    // leaving `path` missing/empty while the ONLY surviving copies sit
-    // in the `.old` backup (original) and `.compact` staging — those
-    // must never be reclaimed as debris while the live dir holds no
-    // data, or the sweep destroys the dataset it exists to protect.
-    // Refuse loudly; the operator restores the backup by hand (the
-    // exact recovery the old protocol documented).
-    val legacySiblings = Seq(path + ".old", path + ".compact")
-      .filter(d => Files.exists(Paths.get(d)))
-    if (liveSeg.isEmpty && !visibleData(Paths.get(path)) &&
-        legacySiblings.nonEmpty)
-      throw new IllegalStateException(
-        s"$path holds no data but pre-r15 compaction siblings exist " +
-          s"(${legacySiblings.mkString(", ")}) — a crashed two-rename swap; " +
-          "restore the backup manually before compacting")
     // one definition of "retire the plain-layout root files" — used
     // pre-write (migrated: crashed post-flip leftovers) and post-flip
     // (first migration's retire); a fix to one must not miss the other
@@ -286,11 +262,9 @@ object Sources {
       }
     }
     // sweep crash debris: orphan generations (a crashed pass's
-    // not-yet-flipped dir; grace-marked retirees wait out retainMs),
-    // the pre-r15 siblings (safe now — the live dir verifiably holds
-    // data), and — once migrated — any root files a crashed
-    // post-flip retire left behind
-    legacySiblings.foreach(graft.IndexLifecycle.deleteRecursively)
+    // not-yet-flipped dir; grace-marked retirees wait out retainMs)
+    // and — once migrated — any root files a crashed post-flip retire
+    // left behind
     sweepGens()
     val migrated = liveSeg.nonEmpty
     if (migrated) sweepRootFiles()

@@ -20,22 +20,34 @@ object ExactlyOnceSink {
 
   private def commitsDir(outDir: String) = Paths.get(outDir, "_commits")
 
-  /** The committed data dir for `batchId`. Since r17 the marker BODY
-    * names the winning write-once tokened dir (`batch=<id>~<token>`);
-    * an empty pre-r17 marker body or a legacy line-file commit
-    * resolves to the un-tokened `batch=<id>` those writers used. A
-    * path-shaped or wrong-batch body reads as the legacy layout —
-    * the corrupted-marker posture (never alias outside the batch's
-    * own namespace).
+  private def markerOf(outDir: String, batchId: Long) =
+    commitsDir(outDir).resolve(s"b$batchId")
+
+  /** The winning write-once dir NAME (`batch=<id>~<token>`) that the
+    * commit `marker` of `batchId` names. A missing marker, or a body
+    * that is path-shaped or names another batch, raises: a corrupted
+    * marker must never alias outside the batch's own namespace, and
+    * a sweep must never take the real winner for an orphan. Shared
+    * with [[NearDupIngestSink]]'s data phase.
     */
-  def batchDir(outDir: String, batchId: Long): String = {
-    val body = graft.operators.CommitStore.forDir(outDir)
-      .read(commitsDir(outDir).resolve(s"b$batchId"))
-      .map(b => new String(b, "UTF-8").trim).getOrElse("")
-    if (body.startsWith(s"batch=$batchId~") &&
-        !body.contains('/') && !body.contains('\\')) s"$outDir/$body"
-    else s"$outDir/batch=$batchId"
+  private[streaming] def winnerOf(outDir: String, marker: java.nio.file.Path,
+                                  batchId: Long): String = {
+    val body = graft.operators.CommitStore.forDir(outDir).read(marker)
+      .map(b => new String(b, "UTF-8").trim)
+      .getOrElse(throw new IllegalStateException(
+        s"batch $batchId has no commit marker $marker"))
+    if (!body.startsWith(s"batch=$batchId~") ||
+        body.contains('/') || body.contains('\\'))
+      throw new IllegalStateException(
+        s"commit marker $marker names '$body', not a batch=$batchId~<token> dir")
+    body
   }
+
+  /** The committed data dir for `batchId`: the dir its marker names
+    * (see [[winnerOf]] for the failure modes).
+    */
+  def batchDir(outDir: String, batchId: Long): String =
+    s"$outDir/${winnerOf(outDir, markerOf(outDir, batchId), batchId)}"
 
   /** Returns a foreachBatch function writing each micro-batch under
     * `outDir` exactly once: a batch already recorded in the commit
@@ -53,28 +65,17 @@ object ExactlyOnceSink {
     * the [[graft.operators.CommitStore]] seam — not an append-only
     * line file, because APPEND is the other POSIX-only primitive
     * (object stores have no append, and a torn concurrent append can
-    * corrupt every earlier line). Legacy `_committed` line files from
-    * pre-r15 sinks are still READ, so an existing output dir resumes
-    * where it left off. Readers resolve dirs via [[batchDir]].
+    * corrupt every earlier line). Readers resolve dirs via [[batchDir]].
     */
-  def toDir(outDir: String): (DataFrame, Long) => Unit = {
-    // the legacy `_committed` line file is FROZEN (only pre-r15 sinks
-    // appended to it; this sink writes markers) — parse it once per
-    // sink instance, not per micro-batch: NearDupIngestSink's
-    // legacyPhases memo discipline, where the per-batch re-parse had
-    // "defeated the O(1)-probe fast path" (a 1-second-trigger stream
-    // paid the read 86k times a day)
-    lazy val legacy = legacyCommitted(outDir)
+  def toDir(outDir: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       Files.createDirectories(Paths.get(outDir))
       val store = graft.operators.CommitStore.forDir(outDir)
-      val marker = commitsDir(outDir).resolve(s"b$batchId")
+      val marker = markerOf(outDir, batchId)
       // O(1) fast path on the batch's own marker — the full
       // committed() listing grows with stream lifetime and was being
-      // paid per micro-batch; the legacy line file is only consulted
-      // when the marker is absent
-      val already = store.exists(marker) || legacy.contains(batchId)
-      if (!already) {
+      // paid per micro-batch
+      if (!store.exists(marker)) {
         val name = s"batch=$batchId~${graft.operators.WriterToken.next()}"
         batch.write.parquet(s"$outDir/$name")
         if (store.putIfAbsent(marker, (name + "\n").getBytes("UTF-8")))
@@ -87,14 +88,9 @@ object ExactlyOnceSink {
         // id never commits again, so redelivery is the one later
         // moment anyone looks at it. Redeliveries only happen at
         // recovery, so the listing is paid per restart, not per batch.
-        // keep="" for legacy commits is right: the legacy winner is
-        // the un-tokened dir, which sweepAttempts never touches.
-        val winner = store.read(marker)
-          .map(b => new String(b, "UTF-8").trim).getOrElse("")
-        sweepAttempts(outDir, batchId, keep = winner)
+        sweepAttempts(outDir, batchId, keep = winnerOf(outDir, marker, batchId))
       }
     }
-  }
 
   /** Reclaim `batch=<id>~*` dirs of crashed earlier attempts once a
     * winner is named — keeps debris bounded without a per-batch
@@ -112,47 +108,25 @@ object ExactlyOnceSink {
     } finally ls.close()
   }
 
-  /** Legacy pre-r15 `_committed` line-file ids; torn lines (no
-    * trailing newline + a concatenated next append) fail toLongOption
-    * and read as uncommitted — replay heals.
-    */
-  private def legacyCommitted(outDir: String): Set[Long] = {
-    val legacy = Paths.get(outDir, "_committed")
-    if (Files.exists(legacy))
-      Files.readAllLines(legacy).asScala.filter(_.nonEmpty)
-        .flatMap(_.toLongOption).toSet
-    else Set.empty[Long]
-  }
-
   /** Committed batch ids (the sink-side clock): the `_commits/b<id>`
-    * markers plus any legacy pre-r15 `_committed` line file.
+    * markers.
     */
-  def committed(outDir: String): Set[Long] = {
-    val markers = graft.operators.CommitStore.forDir(outDir)
+  def committed(outDir: String): Set[Long] =
+    graft.operators.CommitStore.forDir(outDir)
       .list(commitsDir(outDir))
       .flatMap(n => if (n.startsWith("b")) n.drop(1).toLongOption else None)
       .toSet
-    markers ++ legacyCommitted(outDir)
-  }
 
   /** Drop a batch's commit (marker or data dirs may outlive the other
     * by a crash; all are removed, marker first so the id leaves the
     * committed clock before its bytes do). ALL of the id's dirs go:
-    * the winner's tokened dir, any crashed-loser attempt orphans, and
-    * the legacy un-tokened layout — so retiring an id cannot strand a
-    * loser dir whose id never commits again. For retention sweeps of
-    * snapshot-style sinks; legacy line-file ids cannot be retired
-    * (append-only file) and are left listed — their dirs are still
-    * reclaimed.
+    * the winner's tokened dir and any crashed-loser attempt orphans —
+    * so retiring an id cannot strand a loser dir whose id never
+    * commits again. For retention sweeps of snapshot-style sinks.
     */
-  private[streaming] def retire(outDir: String, batchId: Long): Boolean = {
-    val hadMarker = graft.operators.CommitStore.forDir(outDir)
-      .delete(commitsDir(outDir).resolve(s"b$batchId"))
+  private[streaming] def retire(outDir: String, batchId: Long): Unit = {
+    graft.operators.CommitStore.forDir(outDir).delete(markerOf(outDir, batchId))
     sweepAttempts(outDir, batchId, keep = "") // "" matches no tokened name
-    graft.IndexLifecycle.deleteRecursively(s"$outDir/batch=$batchId")
-    // false = nothing to un-list (a legacy line-file id, or already
-    // retired) — the caller's skip-cache signal
-    hadMarker
   }
 
   /** Reclaim every `batch=*` dir that is not the committed winner of
@@ -162,7 +136,9 @@ object ExactlyOnceSink {
     * keeps the dir at ~`keepSnapshots` entries, so the listing is
     * O(keep), not O(stream lifetime)); delta-style sinks keep every
     * batch and never call this. Deleting a live zombie attempt for a
-    * kept id just fails the zombie's job — the documented posture.
+    * kept id just fails the zombie's job — the documented posture. A
+    * kept id whose marker fails [[winnerOf]] raises before anything
+    * is deleted.
     */
   private[streaming] def sweepOrphans(outDir: String, keep: Set[Long]): Unit = {
     val p = Paths.get(outDir)
@@ -241,26 +217,13 @@ final class TopNUpdateSink(outDir: String, n: Int) extends Serializable {
     // such entry peaks. Delta-style sinks (toDir users whose batches
     // are each real output) keep everything; snapshots don't.
     val ids = ExactlyOnceSink.committed(outDir).toSeq.sorted
-    // a marker-backed id leaves committed() when its marker goes, but
-    // a LEGACY line-file id cannot be un-listed (append-only file)
-    // and would otherwise be re-retired — each retire paying a
-    // directory listing — on EVERY micro-batch for the life of the
-    // stream. Cache ONLY those (the set stays bounded by the frozen
-    // legacy file, never one-entry-per-batch); a restart redoes them
-    // once: retire is idempotent.
-    ids.dropRight(keepSnapshots).foreach { id =>
-      if (!retiredThisRun.contains(id) &&
-          !ExactlyOnceSink.retire(outDir, id)) retiredThisRun.add(id)
-    }
+    ids.dropRight(keepSnapshots).foreach(ExactlyOnceSink.retire(outDir, _))
     // heal crash debris the per-id paths can't see: a retire that died
     // between marker-delete and dir-delete stranded a dir whose id is
     // no longer committed (and never will be again). The dir is
     // retention-bounded, so this listing is O(keepSnapshots + debris).
     ExactlyOnceSink.sweepOrphans(outDir, ids.takeRight(keepSnapshots).toSet)
   }
-
-  @transient private lazy val retiredThisRun =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 
   private val keepSnapshots = 8
 
@@ -312,47 +275,18 @@ final class NearDupIngestSink(indexDir: String, outDir: String,
   import org.apache.spark.sql.functions.col
 
   // one marker FILE per (batch, phase) through the CommitStore seam —
-  // see ExactlyOnceSink.toDir's rationale (append is POSIX-only);
-  // legacy `_phases` line files from pre-r15 sinks are still read
+  // see ExactlyOnceSink.toDir's rationale (append is POSIX-only)
   private def marksDir = Paths.get(outDir, "_phasemarks")
-  private def legacyLog = Paths.get(outDir, "_phases")
-
-  /** Well-formed legacy `_phases` entries: exactly `<digits>:(data|
-    * index)`. A torn pre-r15 append (no trailing newline, the next
-    * append concatenates: `4:dat5:index`, `5:`, `x:index`) reads as
-    * UNCOMMITTED so replay heals — the corrupted-marker posture
-    * everywhere else in the repo. The old prefix/suffix parsing
-    * either crashed on such lines (`split(':')(1)` AIOOBE, unguarded
-    * `.toLong`) or, worse, marked the WRONG batch fully ingested
-    * (`4:dat5:index`.endsWith(":index") credited batch 4). Ids parse
-    * with toLongOption (legacyCommitted's rule) — a digit
-    * concatenation past Long range must read as uncommitted, never
-    * throw on every restart. The file is FROZEN (pre-r15 writers are
-    * gone), so it parses once per sink instance, not per micro-batch
-    * — the O(1)-probe fast path was otherwise defeated on exactly
-    * the hot path it targets.
-    */
-  @transient private lazy val legacyPhases: Seq[(Long, String)] =
-    if (!Files.exists(legacyLog)) Seq.empty
-    else {
-      val wellFormed = "^(\\d+):(data|index)$".r
-      Files.readAllLines(legacyLog).asScala.toSeq.collect {
-        case wellFormed(id, ph) => (id, ph)
-      }.flatMap { case (id, ph) => id.toLongOption.map(_ -> ph) }
-    }
 
   private def phases(batchId: Long): Set[String] = {
     // O(1) exact-name existence probes (marker names are exactly
     // b<id>-<phase>, so PosixCommitStore's crash-staging debris
     // `b<id>-data.tmp-<nonce>` can never match); the pre-r17 full
     // listing of _phasemarks grew with stream lifetime and was paid
-    // per micro-batch. Legacy line file consulted only when the
-    // markers alone don't already answer.
+    // per micro-batch
     val store = graft.operators.CommitStore.forDir(outDir)
-    val marks = Set("data", "index")
+    Set("data", "index")
       .filter(ph => store.exists(marksDir.resolve(s"b$batchId-$ph")))
-    if (marks.size == 2) marks
-    else marks ++ legacyPhases.collect { case (id, ph) if id == batchId => ph }
   }
 
   private def mark(batchId: Long, phase: String, body: String = ""): Unit =
@@ -361,18 +295,14 @@ final class NearDupIngestSink(indexDir: String, outDir: String,
         body.getBytes("UTF-8")): Unit
 
   /** The committed admitted-docs dir for `batchId`: the `data` marker
-    * body names the winning tokened dir (write-once, as in
-    * [[ExactlyOnceSink.batchDir]]); empty pre-r17 bodies and legacy
-    * commits resolve to the un-tokened `batch=<id>`.
+    * body names the winning tokened dir (write-once, and failing
+    * loudly on a missing or corrupted marker, as in
+    * [[ExactlyOnceSink.batchDir]]).
     */
-  def dataDirOf(batchId: Long): String = {
-    val body = graft.operators.CommitStore.forDir(outDir)
-      .read(marksDir.resolve(s"b$batchId-data"))
-      .map(b => new String(b, "UTF-8").trim).getOrElse("")
-    if (body.startsWith(s"batch=$batchId~") &&
-        !body.contains('/') && !body.contains('\\')) s"$outDir/$body"
-    else s"$outDir/batch=$batchId"
-  }
+  def dataDirOf(batchId: Long): String = s"$outDir/${dataWinner(batchId)}"
+
+  private def dataWinner(batchId: Long): String =
+    ExactlyOnceSink.winnerOf(outDir, marksDir.resolve(s"b$batchId-data"), batchId)
 
   /** Redelivery-path orphan sweep (ExactlyOnceSink.toDir's r18
     * discipline): a crashed data-phase LOSER — which re-gated against
@@ -383,11 +313,8 @@ final class NearDupIngestSink(indexDir: String, outDir: String,
     * the winner. Paid only at recovery (redeliveries), never per
     * live batch.
     */
-  private def sweepLosers(batchId: Long): Unit = {
-    val winner = Paths.get(dataDirOf(batchId)).getFileName.toString
-    ExactlyOnceSink.sweepAttempts(outDir, batchId,
-      keep = if (winner.startsWith(s"batch=$batchId~")) winner else "")
-  }
+  private def sweepLosers(batchId: Long): Unit =
+    ExactlyOnceSink.sweepAttempts(outDir, batchId, keep = dataWinner(batchId))
 
   def apply(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
@@ -423,14 +350,12 @@ final class NearDupIngestSink(indexDir: String, outDir: String,
   }
 
   /** Committed (fully ingested) batch ids. */
-  def committed: Set[Long] = {
-    val marks = graft.operators.CommitStore.forDir(outDir)
+  def committed: Set[Long] =
+    graft.operators.CommitStore.forDir(outDir)
       .list(marksDir)
       .collect { case n if n.startsWith("b") && n.endsWith("-index") =>
         n.stripPrefix("b").stripSuffix("-index") }
       .flatMap(_.toLongOption).toSet
-    marks ++ legacyPhases.collect { case (id, "index") => id }.toSet
-  }
 }
 
 object NearDupIngestSink {

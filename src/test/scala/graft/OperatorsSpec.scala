@@ -118,7 +118,7 @@ class OperatorsSpec extends SparkSpecBase {
     // measured rate over 100k foreign probes must stay under 10x that
     val bits = new Array[Long]((1 << 18) / 64)
     (0 until 10000).foreach(i => graft.functions.GraftHashOps.bloomSet(bits, i.toLong, 5))
-    val bytes = graft.functions.GraftHashOps.longsToBytes(bits)
+    val bytes = graft.functions.GraftHashOps.bloomBytesWithHeader(bits, 5)
     (0 until 10000).foreach(i => assert(
       graft.functions.GraftHashOps.bloomMightContain(bytes, i.toLong, 5),
       s"inserted key $i reported absent"))

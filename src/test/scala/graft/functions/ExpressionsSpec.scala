@@ -352,18 +352,19 @@ class ExpressionsSpec extends SparkSpecBase {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(Array(2.0, 0.0)),
       nanCents, 1)
     assert(routed.getInt(0) == 1, s"NaN centroid won the routing: $routed")
-    // wrong-k bloom probe fails LOUDLY (the header carries built-k);
-    // the matching k and a legacy raw sketch both probe fine
+    // wrong-k bloom probe fails LOUDLY (the header carries built-k),
+    // and so does a headerless raw-word byte string; the matching k
+    // probes fine
     val sketch = spark.sql(
       "SELECT graft_bloom(id, 1024, 5) FROM range(100)").collect()(0).getAs[Array[Byte]](0)
     assert(GraftHashOps.bloomHeaderHashes(sketch).contains(5))
     assert(GraftHashOps.bloomMightContain(sketch, 42L, 5))
     intercept[IllegalArgumentException](
       GraftHashOps.bloomMightContain(sketch, 42L, 7))
-    val legacy = java.util.Arrays.copyOfRange(sketch, 9, sketch.length)
-    assert(GraftHashOps.bloomHeaderHashes(legacy).isEmpty)
-    assert(GraftHashOps.bloomMightContain(legacy, 42L, 5),
-      "legacy raw-word sketches must keep probing")
+    val raw = java.util.Arrays.copyOfRange(sketch, 9, sketch.length)
+    assert(GraftHashOps.bloomHeaderHashes(raw).isEmpty)
+    intercept[IllegalArgumentException](
+      GraftHashOps.bloomMightContain(raw, 42L, 5))
     // builder hygiene: uniform arity errors, total width parse,
     // BIGINT literals accepted where siblings accept them
     intercept[IllegalArgumentException](spark.sql("SELECT graft_dot(array(1.0D))").collect())

@@ -258,42 +258,6 @@ class BloomIndexSpec extends SparkSpecBase {
       .select("k").as[Long].collect().toSeq == Seq(50L))
   }
 
-  test("legacy pre-numBits sidecar names fold by the largest sketch, not an arbitrary row") {
-    val dir = tmpDir("bloomlegacy")
-    MergeTable.write(spark, table(400), "k", dir, nFiles = 8)
-    MergeTable.buildBloomIndex(spark, dir, "tag", numBits = 1 << 14)
-    // simulate a PRE-UPGRADE sidecar: un-publish the pointer and park
-    // the parquet at the legacy root-dir home, with the numBits
-    // segment stripped from the name (the pre-numBits era)
-    val built = MergeTable.bloomDirs(dir).head
-    java.nio.file.Files.delete(
-      java.nio.file.Path.of(dir, "_bloomptr", built.name))
-    java.nio.file.Files.move(
-      java.nio.file.Path.of(built.dataDir),
-      java.nio.file.Path.of(dir, "_bloom-g0~7~tag"))
-    assert(bloomDirNames(dir) == Seq("_bloom-g0~7~tag"),
-      "legacy root-dir segment must stay discoverable")
-    MergeTable.merge(spark, dir,
-      Seq((50L, "U", "fresh-tag", 0.5)).toDF("k", "op", "tag", "bal"), "k")
-    // resolved bits = max sketch length in the fold frame × 8 = 16384,
-    // recorded into the folded name; fresh files never undersized —
-    // and the fold REPUBLISHED the legacy segment through the pointer
-    // and swept the root dir
-    assert(bloomDirNames(dir) == Seq("_bloom-g1~7b16384~tag"))
-    assert(MergeTable.bloomDirs(dir).forall(_.pointed),
-      "fold must republish a legacy segment through the pointer")
-    assert(java.nio.file.Files.notExists(
-      java.nio.file.Path.of(dir, "_bloom-g0~7~tag")),
-      "superseded legacy root dir survived the fold's sweep")
-    val lens = spark.read.parquet(segDataDir(dir, "_bloom-g1~7b16384~tag"))
-      .agg(min(length(col("bloom"))), max(length(col("bloom")))).head()
-    assert(lens.getInt(0) == 2057 && lens.getInt(1) == 2057, lens.toString) // 2048 + header
-    assert(MergeTable.scanEqualsBloom(spark, dir, "tag", "fresh-tag")
-      .select("k").as[Long].collect().toSeq == Seq(50L))
-    assert(MergeTable.scanEqualsBloom(spark, dir, "tag", tagOf(333L))
-      .select("k").as[Long].collect().toSeq == Seq(333L))
-  }
-
   test("a different-numHashes segment survives the fold and keeps pruning its files") {
     val dir = tmpDir("bloomkmix")
     MergeTable.write(spark, table(800), "k", dir, nFiles = 8)
@@ -359,12 +323,15 @@ class BloomIndexSpec extends SparkSpecBase {
     val dir = tmpDir("bloomstaged")
     MergeTable.write(spark, table(400), "k", dir, nFiles = 8)
     MergeTable.buildBloomIndex(spark, dir, "tag")
-    // a PRE-r14 builder that died after staging but before the dir move
-    val staged = java.nio.file.Path.of(dir, "_bloom-g0~7b131072~tag.tmpdeadtok")
-    java.nio.file.Files.createDirectories(staged)
-    java.nio.file.Files.write(staged.resolve("part-junk.parquet"), Array[Byte](1, 2))
-    // a POINTER-era builder that died between parquet write and flip:
-    // an orphaned data dir no pointer references...
+    // a pointer flip that died mid-write: the POSIX store's staged
+    // pointer (its suffix lands in the column segment of the name)...
+    val liveSeg = java.nio.file.Path.of(MergeTable.bloomDirs(dir).head.dataDir)
+      .getFileName.toString
+    val staged = java.nio.file.Path.of(dir, "_bloomptr",
+      "_bloom-g0~7b131072~tag.tmp-1-deadbeef")
+    java.nio.file.Files.write(staged, s"$liveSeg\n".getBytes("UTF-8"))
+    // ...a builder that died between parquet write and flip: an
+    // orphaned data dir no pointer references...
     val orphan = java.nio.file.Path.of(dir, "_bloomseg-deadtok")
     java.nio.file.Files.createDirectories(orphan)
     java.nio.file.Files.write(orphan.resolve("part-junk.parquet"), Array[Byte](3, 4))

@@ -154,42 +154,6 @@ class CheckpointSpec extends SparkSpecBase {
     assert(MergeTable.committedGen(dir).contains(5 * K + 1))
   }
 
-  test("a pre-_log table reads through the root fallback and upgrades in place") {
-    val dir = tmpDir("ckpt-legacy")
-    mkTable(dir)
-    (1 to 3).foreach(_ => MergeTable.commitCarryForward(dir, Map("op" -> "carry")))
-    // simulate the pre-_log layout: markers in the table root, no log
-    // subdir (and so no checkpoints/pointer)
-    val log = java.nio.file.Path.of(dir, "_log")
-    val ls = java.nio.file.Files.list(log)
-    try {
-      import scala.jdk.CollectionConverters._
-      ls.iterator().asScala.toSeq.foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("_commit-g"))
-          java.nio.file.Files.move(p, java.nio.file.Path.of(dir, n))
-        else java.nio.file.Files.delete(p)
-      }
-    } finally ls.close()
-    java.nio.file.Files.delete(log)
-    // reads resolve through the legacy location
-    assert(MergeTable.committedGen(dir).contains(3))
-    assert(MergeTable.committedMeta(dir).contains("token"))
-    assert(MergeTable.readTable(spark, dir).count() == 200)
-    assert(MergeTable.history(spark, dir).count() == 4)
-    // the next commit upgrades in place: new marker in _log/, early
-    // generations stay readable from the root, lineage spans both
-    MergeTable.merge(spark, dir,
-      Seq((1L, "U", "s8", 8.8)).toDF("k", "op", "seg", "bal"), "k")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Path.of(dir, "_log", "_commit-g4")))
-    assert(MergeTable.committedGen(dir).contains(4))
-    assert(MergeTable.history(spark, dir).count() == 5)
-    assert(MergeTable.readTable(spark, dir).filter(col("k") === 1)
-      .select("seg").as[String].collect().toSeq == Seq("s8"))
-    assert(MergeTable.readTable(spark, dir, asOf = Some(0)).count() == 200)
-  }
-
   test("4-writer carry storm: dense log, exactly one winner per generation, rollups land") {
     val dir = tmpDir("ckpt-race")
     mkTable(dir)

@@ -146,24 +146,21 @@ class DropColumnSpec extends SparkSpecBase {
       "lost-race rollback stripped the winner's byte-resurrection guard")
   }
 
-  test("legacy un-versioned governance files read as v0 and vacuum after supersession") {
-    val dir = tmpDir("governlegacy")
+  test("vacuum sweeps superseded governance versions; the state reads identically") {
+    val dir = tmpDir("governvacuum")
     MergeTable.write(spark, table(50), "k", dir, nFiles = 2)
-    // a pre-CAS writer left plain files
-    Files.write(Path.of(dir, "_dropped_cols"), "note\n".getBytes("UTF-8"))
-    Files.write(Path.of(dir, "_constraints"), "bal-pos=bal > 0\n".getBytes("UTF-8"))
-    assert(MergeTable.droppedColumns(dir) == Set("note"))
-    assert(MergeTable.checkConstraints(dir) == Map("bal-pos" -> "bal > 0"))
-    // first CAS write supersedes the legacy file (content carried)
+    MergeTable.updateDroppedCols(dir)(_ + "note")
     MergeTable.updateDroppedCols(dir)(_ + "extra")
-    assert(MergeTable.droppedColumns(dir) == Set("extra", "note"))
+    MergeTable.addCheckConstraint(spark, dir, "bal-pos", "bal > 0")
     assert(MergeTable.dropCheckConstraint(dir, "bal-pos"))
-    assert(MergeTable.checkConstraints(dir).isEmpty)
-    // vacuum sweeps the superseded legacy files + old versions, and
-    // the surviving state still reads identically
+    assert(Files.exists(Path.of(dir, "_dropped_cols-v1")))
+    assert(Files.exists(Path.of(dir, "_constraints-v1")))
+    // vacuum keeps only the newest version of each governance file
     MergeTable.vacuum(spark, dir)
-    assert(!Files.exists(Path.of(dir, "_dropped_cols")))
-    assert(!Files.exists(Path.of(dir, "_constraints")))
+    assert(!Files.exists(Path.of(dir, "_dropped_cols-v1")))
+    assert(Files.exists(Path.of(dir, "_dropped_cols-v2")))
+    assert(!Files.exists(Path.of(dir, "_constraints-v1")))
+    assert(Files.exists(Path.of(dir, "_constraints-v2")))
     assert(MergeTable.droppedColumns(dir) == Set("extra", "note"))
     assert(MergeTable.checkConstraints(dir).isEmpty)
   }

@@ -20,29 +20,28 @@ class IndexManifestSpec extends SparkSpecBase {
 
   test("manifest: adoption, append, replace-abort, retention") {
     val dir = tmpDir("ixman")
-    // adoption: first commit sees no head and starts from legacyBase
-    val h0 = IndexManifest.commitAppend(dir, Seq("seg-a/pcell=1/f1"))(
-      Seq("cell=0/old1", "cell=1/old2"))
+    // first commit sees no head and starts from an empty live set
+    val h0 = IndexManifest.commitAppend(dir,
+      Seq("seg-o/pcell=0/old1", "seg-o/pcell=1/old2", "seg-a/pcell=1/f1"))
     assert(h0.gen == 0L)
-    assert(h0.files.toSet == Set("cell=0/old1", "cell=1/old2", "seg-a/pcell=1/f1"))
-    // later appends build on the head, never on legacyBase
-    val h1 = IndexManifest.commitAppend(dir, Seq("seg-b/pcell=0/f2"))(
-      sys.error("legacy base must not be consulted once a head exists"))
+    assert(h0.files.toSet == Set("seg-o/pcell=0/old1", "seg-o/pcell=1/old2", "seg-a/pcell=1/f1"))
+    // later appends build on the head
+    val h1 = IndexManifest.commitAppend(dir, Seq("seg-b/pcell=0/f2"))
     assert(h1.gen == 1L && h1.files.size == 4)
     // replace: swap two files for one, atomically
     val h2 = IndexManifest.commitReplace(dir,
-      Set("cell=0/old1", "seg-b/pcell=0/f2"), Seq("seg-c/pcell=0/fold"))(Nil)
+      Set("seg-o/pcell=0/old1", "seg-b/pcell=0/f2"), Seq("seg-c/pcell=0/fold"))
     assert(h2.exists(_.files.toSet ==
-      Set("cell=1/old2", "seg-a/pcell=1/f1", "seg-c/pcell=0/fold")))
+      Set("seg-o/pcell=1/old2", "seg-a/pcell=1/f1", "seg-c/pcell=0/fold")))
     // replace-abort: an input that already left the manifest (a
     // concurrent maintenance pass won) must refuse, not resurrect
     assert(IndexManifest.commitReplace(dir,
-      Set("cell=0/old1"), Seq("seg-d/pcell=0/x"))(Nil).isEmpty)
+      Set("seg-o/pcell=0/old1"), Seq("seg-d/pcell=0/x")).isEmpty)
     assert(IndexManifest.head(dir).map(_.gen).contains(2L),
       "aborted replace must not mint a generation")
     // retention: old generations are reclaimed, head always resolves
     (1 to IndexManifest.keepGens.toInt + 4).foreach(i =>
-      IndexManifest.commitAppend(dir, Seq(s"seg-r$i/pcell=0/f"))(Nil))
+      IndexManifest.commitAppend(dir, Seq(s"seg-r$i/pcell=0/f")))
     val head = IndexManifest.head(dir).get
     assert(head.gen == 2L + IndexManifest.keepGens + 4)
     assert(IndexManifest.committedGen(dir).contains(head.gen))
@@ -260,40 +259,5 @@ class IndexManifestSpec extends SparkSpecBase {
     assert(Similarity.indexVectors(spark, idx)
       .filter(col("vec_id").isin((batchA ++ batchB): _*)).isEmpty)
     assert(Similarity.vectorTombstones(spark, idx).isEmpty)
-  }
-
-  test("legacy pre-manifest index: reads fall back, first mutation adopts, eras fold together") {
-    // hand-build the pre-r18 layout: flat cell=K dirs, no cell column
-    // in the bytes, no manifest — what an old deployment's index
-    // looks like on disk
-    val (_, src) = freshIndex("legacy-src")
-    val legacy = tmpDir("ixman-legacy-idx")
-    val srcTrained = Similarity.trainedDir(src)
-    Seq("centroids", "pqbooks").foreach { a =>
-      spark.read.parquet(s"$srcTrained/$a").write.parquet(s"$legacy/$a")
-    }
-    Similarity.indexVectors(spark, src)
-      .write.partitionBy("cell").parquet(s"$legacy/vectors")
-    val rows = spark.read.parquet(s"$legacy/vectors").count()
-    assert(IndexManifest.head(legacy).isEmpty)
-    // legacy read path: no manifest, dir scan, canonical columns
-    val lv = Similarity.indexVectors(spark, legacy)
-    assert(lv.count() == rows)
-    assert(lv.columns.toSeq == Seq("vec_id", "v", "nrm", "cell", "code"))
-    // first mutation ADOPTS: the legacy files become generation 0's
-    // base and the batch publishes on top
-    Similarity.appendToIvfIndex(spark, legacy,
-      synthCorpus(15, 777000L).select("vec_id", "embedding"))
-    val head = IndexManifest.head(legacy).get
-    assert(head.files.exists(_.startsWith("cell=")), "legacy files not adopted")
-    assert(head.files.exists(_.startsWith("seg-")), "append batch not committed")
-    assert(Similarity.indexVectors(spark, legacy).count() == rows + 15)
-    // compaction folds MIXED-era inputs (adopted cell= files read with
-    // their dir-borne cell, seg files with their byte-borne cell)
-    val folds = Similarity.compactIvfCells(spark, legacy)
-    assert(folds.nonEmpty)
-    val after = IndexManifest.head(legacy).get.files
-    assert(Similarity.indexVectors(spark, legacy).count() == rows + 15)
-    assert(after.groupBy(Similarity.cellOfPath).values.forall(_.size == 1))
   }
 }

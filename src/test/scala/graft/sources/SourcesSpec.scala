@@ -213,30 +213,6 @@ class SourcesSpec extends SparkSpecBase {
     assert(Sources.readCompacted(spark, "parquet", path).count() == rows)
   }
 
-  test("compaction refuses to sweep pre-r15 backups while the live dir holds no data") {
-    val path = tmpDir("src-compact-crash") + "/t"
-    // model the pre-r15 two-rename crash window exactly: path→path.old
-    // landed, path.compact→path did not — the data survives ONLY in
-    // the siblings
-    Tables.region(spark, sfDir).write.parquet(path + ".old")
-    Tables.region(spark, sfDir).repartition(1).write.parquet(path + ".compact")
-    val e = intercept[IllegalStateException] {
-      Sources.compact(spark, path, targetFiles = 1)
-    }
-    assert(e.getMessage.contains("restore the backup"))
-    // both survivors untouched — the sweep must never have run
-    assert(spark.read.parquet(path + ".old").count() > 0)
-    assert(spark.read.parquet(path + ".compact").count() > 0)
-    // operator recovery (copy the backup in), then compaction proceeds
-    // and the siblings are reclaimed as ordinary debris
-    spark.read.parquet(path + ".old").write.parquet(path)
-    Sources.compact(spark, path, targetFiles = 1)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".old")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".compact")))
-    assert(Sources.readCompacted(spark, "parquet", path).count() ==
-      Tables.region(spark, sfDir).count())
-  }
-
   test("compaction: the head flip rides a registered CommitStore") {
     val path = tmpDir("src-compact-store") + "/t"
     Tables.region(spark, sfDir).repartition(4).write.parquet(path)

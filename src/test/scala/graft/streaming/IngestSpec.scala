@@ -39,7 +39,7 @@ class IngestSpec extends SparkSpecBase {
 
   private def admitted(outDir: String, batchId: Long): Set[Long] =
     // resolve through the data marker like the sink's own index phase
-    // (since r17 the winning dir is tokened; legacy dirs stay plain)
+    // (the winning dir is tokened)
     spark.read.parquet(new NearDupIngestSink("unused", outDir).dataDirOf(batchId))
       .select("doc_id").collect().map(_.getLong(0)).toSet
 
@@ -76,27 +76,6 @@ class IngestSpec extends SparkSpecBase {
     }
   }
 
-  test("torn legacy _phases lines read as uncommitted — replay heals, never crashes or credits the wrong batch") {
-    withIngest { (table, outDir, sink) =>
-      java.nio.file.Files.createDirectories(java.nio.file.Path.of(outDir))
-      // the pre-r15 torn-append corruption shapes: a concatenated pair
-      // (batch 4 must NOT read as index-committed), a dangling colon,
-      // and a non-numeric id (both crashed the old split-based parse)
-      // ...and a digit concatenation past Long range (two torn ids
-      // glued): it matches the digits grammar but must read as
-      // uncommitted via toLongOption, never NumberFormatException on
-      // every restart
-      java.nio.file.Files.write(java.nio.file.Path.of(outDir, "_phases"),
-        "4:dat5:index\n5:\nx:index\n99999999999999999999:data\n6:index\n".getBytes)
-      assert(sink.committed == Set(6L),
-        s"torn lines mis-read: ${sink.committed}")
-      // batch 4 replays in full (both phases) — heals, not skips
-      sink(Seq((40L, novelA)).toDF("doc_id", "text"), 4L)
-      assert(sink.committed == Set(4L, 6L))
-      assert(admitted(outDir, 4) == Set(40L))
-    }
-  }
-
   test("ingest replay: a fully committed batch is a no-op; a data-committed batch resumes at the index phase") {
     withIngest { (table, outDir, sink) =>
       val b0 = Seq((1L, baseText), (2L, novelA)).toDF("doc_id", "text")
@@ -117,13 +96,12 @@ class IngestSpec extends SparkSpecBase {
       // on disk and logged `data`, but its index commit never ran.
       // The resumed apply() must index the COMMITTED output (doc C),
       // ignoring whatever the re-offered batch would now gate to.
+      val won = s"batch=7~${graft.operators.WriterToken.next()}"
       Seq((7L, novelC)).toDF("doc_id", "text")
-        .write.parquet(s"$outDir/batch=7")
-      // written as a LEGACY `_phases` line file (the pre-r15 log form)
-      // — the resumed sink must honor it through the legacy read path
-      java.nio.file.Files.write(java.nio.file.Path.of(outDir, "_phases"),
-        "7:data\n".getBytes, java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+        .write.parquet(s"$outDir/$won")
+      assert(graft.operators.CommitStore.forDir(outDir).putIfAbsent(
+        java.nio.file.Path.of(outDir, "_phasemarks", "b7-data"),
+        s"$won\n".getBytes("UTF-8")))
       sink(Seq((7L, novelC)).toDF("doc_id", "text"), 7L)
       assert(admitted(outDir, 7) == Set(7L))
       assert(sink.committed == Set(0L, 7L))

@@ -49,7 +49,7 @@ class MonoidLawsSpec extends AnyFunSuite {
       assert(or(a, new Array[Long](m / 64)).toSeq == a.toSeq, "identity")
       // the merged filter answers membership for the UNION of inputs
       // (no false negatives survive a merge)
-      val merged = longsToBytes(or(a, b))
+      val merged = bloomBytesWithHeader(or(a, b), 5)
       (ka ++ kb).foreach(k =>
         assert(bloomMightContain(merged, k, 5), s"merge lost key $k"))
       // and a merge is exactly the filter built from the union

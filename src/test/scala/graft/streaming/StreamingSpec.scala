@@ -102,13 +102,10 @@ class StreamingSpec extends SparkSpecBase {
     val sink = ExactlyOnceSink.toDir(out)
     sink(Seq(("a", 1L)).toDF("k", "v"), 0L)
     sink(Seq(("b", 2L)).toDF("k", "v"), 1L)
-    // batch 0 carries a post-commit loser orphan AND a stray legacy
-    // un-tokened dir — retire must take the winner, the orphan, and
-    // the legacy layout together with the marker
+    // batch 0 carries a post-commit loser orphan — retire must take
+    // the winner and the orphan together with the marker
     val orphan = java.nio.file.Path.of(out, "batch=0~crashedloser")
     java.nio.file.Files.createDirectories(orphan)
-    val legacyDir = java.nio.file.Path.of(out, "batch=0")
-    java.nio.file.Files.createDirectories(legacyDir)
     ExactlyOnceSink.retire(out, 0L)
     assert(ExactlyOnceSink.committed(out) == Set(1L))
     locally {
@@ -137,7 +134,24 @@ class StreamingSpec extends SparkSpecBase {
     assert(!java.nio.file.Files.exists(loser2), "kept id's loser survived")
   }
 
-  test("exactly-once sink: the batch log rides the CommitStore and honors legacy line files") {
+  test("sweepOrphans raises on a kept id with a corrupted marker body and keeps its winner") {
+    val out = tmpDir("eo-garbage")
+    val sink = ExactlyOnceSink.toDir(out)
+    sink(Seq(("a", 1L)).toDF("k", "v"), 0L)
+    val winner = java.nio.file.Path.of(ExactlyOnceSink.batchDir(out, 0))
+    graft.operators.CommitStore.forDir(out).putReplace(
+      java.nio.file.Path.of(out, "_commits", "b0"), "garbage\n".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](
+      ExactlyOnceSink.sweepOrphans(out, keep = Set(0L)))
+    assert(e.getMessage.contains("b0"), e.getMessage)
+    assert(java.nio.file.Files.exists(winner),
+      "the committed winner was swept as an orphan")
+    // batchDir fails the same way, and on a missing marker
+    intercept[IllegalStateException](ExactlyOnceSink.batchDir(out, 0))
+    intercept[IllegalStateException](ExactlyOnceSink.batchDir(out, 1))
+  }
+
+  test("exactly-once sink: the batch log rides the CommitStore") {
     // markers through a registered store: nothing log-shaped on the
     // filesystem (the object-store deployment shape — no append)
     val out = tmpDir("eo-store")
@@ -154,26 +168,6 @@ class StreamingSpec extends SparkSpecBase {
       assert(spark.read.parquet(ExactlyOnceSink.batchDir(out, 0))
         .as[(String, Long)].collect().toList == List(("a", 1L)))
     } finally graft.operators.CommitStore.unregister(out)
-    // a pre-r15 output dir (append-line `_committed` log) resumes
-    // where it left off: its ids read as committed, new ids land as
-    // markers, and the union is the clock
-    val legacy = tmpDir("eo-legacy")
-    java.nio.file.Files.createDirectories(java.nio.file.Path.of(legacy))
-    java.nio.file.Files.write(java.nio.file.Path.of(legacy, "_committed"),
-      "0\n1\n".getBytes)
-    val sink2 = ExactlyOnceSink.toDir(legacy)
-    sink2(Seq(("stale", 0L)).toDF("k", "v"), 1L) // replay of a legacy id
-    // no batch=1 dir in ANY layout (plain or tokened) may appear
-    locally {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(java.nio.file.Path.of(legacy))
-      val rewritten =
-        try ls.iterator().asScala.exists(_.getFileName.toString.startsWith("batch=1"))
-        finally ls.close()
-      assert(!rewritten, "a legacy-committed batch id was rewritten")
-    }
-    sink2(Seq(("c", 3L)).toDF("k", "v"), 2L)
-    assert(ExactlyOnceSink.committed(legacy) == Set(0L, 1L, 2L))
   }
 
   test("monoid bolt: keyed LongSum state accumulates like the countBolt") {
