@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: times every registered query at the given scale
-  * factor and prints ONE JSON line.
+/** Per-query timer: times every registered query at the given scale
+  * factor and prints ONE JSON line. The repo benchmark is `perfbench/`
+  * (BENCHMARK.json); this main serves scaling runs over the whole
+  * registry (sf0.1, the 10× `GenCorpus` corpus).
   *
   * Each query is forced through the `noop` sink (full plan execution
   * including projections — `count()` would let Catalyst prune the
@@ -19,30 +21,17 @@ import org.apache.spark.sql.SparkSession
   * pair set) and file listings are rebuilt and paid for inside the
   * measured run — warm code, cold data. The measured pass repeats
   * SPARK_GRAFT_BENCH_REPS times (default 3, each rep cold-data) and
-  * reports the per-query MEDIAN, so one contended pass can't dominate
-  * a round's record; raw per-rep rows land in BENCH_DETAIL.json. The
-  * SIDE rows (ann02/dd11 build-probe splits, st01/st03 streaming)
-  * ride the same fold — `reps` observations each, median recorded,
-  * singles in BENCH_DETAIL's `side_reps` — and the one row too long
-  * to triplicate (st02's throughput sweep) stamps the calib workload
-  * on both edges of its measurement window (`sweep_calib`), so no
-  * emitted row is ever a bare single-shot again (the r18 hole: a
-  * contended minute on exactly those rows fabricated a 10.8× dd11b
-  * "regression").
+  * reports the per-query lower MEDIAN, so one contended pass can't
+  * dominate the record. Each rep starts with one [[calibWorkload]]
+  * stamp, reported as its median, so a reader can tell a slow host
+  * from a slow plan.
   *
-  * The record SELF-DESCRIBES its trustworthiness AND SELF-HEALS:
-  * stdout carries `batch_min` (best-observed batch seconds — what an
-  * uncontended run would have recorded); rows whose median sits far
-  * above their best rep ([[contendedKeys]]) — or the whole registry,
-  * when the run as a whole looks contended ([[runLooksContended]]) —
-  * are RE-MEASURED once at the end of the run on a fresh cold-data
-  * session, and each such row records min(median, re-measure)
-  * ([[healRows]]). Stdout lists the `healed` keys and whatever is
-  * STILL `contended` after healing; BENCH_DETAIL.json adds the full
-  * heal trail (`queries_preheal`/`queries_heal`) plus per-row
-  * `queries_min` / `queries_spread` maps beside the rep array. A
-  * reader comparing rounds trusts the record when batch ≈ batch_min
-  * and distrusts exactly the still-flagged rows when it isn't.
+  * Stdout carries one line, `{"metric","value","unit","reps","calib",
+  * "queries":{<short key>: secs},["errors":[…] | "errors_n":n],"sf"}`
+  * (see [[stdoutLine]]); BENCH_DETAIL.json carries full-name medians,
+  * per-rep rows, calib reps, full error messages and the run's
+  * `stats_fallbacks`. A query that throws in any pass lands in
+  * `errors` and the run exits 1.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -50,8 +39,13 @@ object Bench {
     val warm = HarnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "WARN",
       "spark.sql.autoBroadcastJoinThreshold" -> "64m")
 
-    def force(spark: SparkSession)(df: org.apache.spark.sql.DataFrame): Unit =
+    def force(spark: SparkSession)(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+
+    // the calib row leads every pass, so each rep's stamp samples the
+    // same host state the rep's query rows are about to run under
+    val calib: (SparkSession, String) => DataFrame = (s, _) => calibWorkload(s)
+    val registry = ("calib" -> calib) +: SparkEntry.queries.toSeq.sortBy(_._1)
 
     // any-phase failures land here; warm failures use a distinguishing
     // prefix (a measured-pass failure of the same key overwrites it
@@ -64,25 +58,13 @@ object Bench {
     // round-to-round comparison without any visible record — so it
     // lands in `errors` (and fails the bench) as a measurement-
     // integrity violation even when the measured pass then succeeds.
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try force(warm)(fn(warm, sfDir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warm $name failed: $e")
-        errors(name) = ("warm_failed: " + e).take(200)
-      }
+    timeAll[(SparkSession, String) => DataFrame](registry,
+      fn => force(warm)(fn(warm, sfDir)))._2.foreach { case (k, m) =>
+      errors(k) = ("warm_failed: " + m).take(200)
     }
-    try force(warm)(calibWorkload(warm)) // compile the yardstick's codegen too
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warm calib failed: $e")
-      errors("calib") = ("warm_failed: " + e).take(200)
-    }
-    runStreaming(warm, sfDir) // warm the streaming plan too
-    operators.MergeTable.cleanupFixtures() // warm pass's tmp fixture tables
-    // ERROR for the measured passes: stray WARN lines (e.g. the
-    // DAGScheduler's async "Failed to cancel job group" during
-    // streaming-query teardown) land in the harness's 2000-char tail
-    // window and crowd out the stdout JSON line — BENCH_r08 recorded
-    // parsed:null exactly this way
+    // the warm pass's tmp fixture tables and session-memoized index dirs
+    operators.MergeTable.cleanupFixtures()
+    IndexLifecycle.evictAll(warm)
     warm.sparkContext.setLogLevel("ERROR")
     // drop every cached dataset (the cache manager is shared across
     // sessions of one context — without this the measured pass would
@@ -92,442 +74,47 @@ object Bench {
     // pass's garbage in its first collections
     System.gc()
 
-    // ---- measured pass: fresh session — warm code, cold data ----
-    // SPARK_GRAFT_BENCH_REPS (default 3) full passes, each on a fresh
-    // session with the shared cache manager cleared, so every rep pays
-    // the same cold-data cost; the per-query row reported downstream is
-    // the MEDIAN across reps. Rationale: driver records swung
-    // 0.68×–1.53× round-to-round on identical code (r6–r8) because one
-    // contended run dominates a single-pass record; a median absorbs
-    // one bad rep without hiding real regressions. Per-rep singles are
-    // preserved in BENCH_DETAIL.json under "rep_queries".
+    // ---- measured pass: fresh session per rep — warm code, cold data ----
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(3)
-    var lastSession: SparkSession = null
     val calibTimes = collection.mutable.ArrayBuffer.empty[Double]
     val repResults = (1 to reps).map { rep =>
       val sess = warm.newSession()
-      // calibration FIRST in each rep, so it samples the same host
-      // state the rep's query rows are about to run under
-      guardRows(Seq("calib"), errors) {
-        val t0 = System.nanoTime()
-        force(sess)(calibWorkload(sess))
-        calibTimes += (System.nanoTime() - t0) / 1e9
-        Seq.empty
-      }
-      val (rows, errs) =
-        timeAll[(SparkSession, String) => org.apache.spark.sql.DataFrame](
-          SparkEntry.queries.toSeq.sortBy(_._1),
-          fn => force(sess)(fn(sess, sfDir)))
+      val (rows, errs) = timeAll[(SparkSession, String) => DataFrame](registry,
+        fn => force(sess)(fn(sess, sfDir)))
       errs.foreach { case (k, m) => errors(k) = m } // any-rep failure is loud
-      // each rep's session gets fresh fixture dirs (identity-keyed) —
-      // sweep them now or reps multiply the tmp-dir leak
+      if (!errs.contains("calib")) calibTimes += rows.head._2
+      // each rep's session gets fresh fixture and index dirs (keyed by
+      // session) — sweep them now or reps multiply the tmp-dir leak
       operators.MergeTable.cleanupFixtures()
+      IndexLifecycle.evictAll(sess)
       if (rep < reps) { sess.catalog.clearCache(); System.gc() }
-      lastSession = sess
-      rows
+      rows.tail
     }
-    val batchResults = medianRows(repResults)
-    // per-row variance across reps: the medians are the record, but a
-    // record that can't describe its own trustworthiness poisons
-    // round-to-round comparison (r10: one globally contended rep put
-    // tx06 at 6.5 s median vs a 1.8 s best rep, and nothing in the
-    // artifact said so). min is the best rep (the least-contended
-    // observation of the same plan); spread is max - min.
-    val repByKey = repResults.flatten.groupBy(_._1)
-    val minRows: Map[String, Double] =
-      repByKey.map { case (k, vs) => k -> vs.map(_._2).min }
-    val spreadRows: Map[String, Double] =
-      repByKey.map { case (k, vs) => k -> (vs.map(_._2).max - vs.map(_._2).min) }
-    val contended = contendedKeys(batchResults, minRows)
-    // side rows run ON THE LAST REP'S SESSION, not a fresh one: the
-    // per-(session, corpus) index memos its ann02/dd11 rows built are
-    // what make ann02p/dd11p pure memo-hit PROBE rows — a fresh
-    // session would silently re-bill the build inside the probe (the
-    // single-pass code shared its one measured session the same way)
-    val spark = lastSession
-
-    // ---- side rows: the SAME median-of-reps discipline as the batch ----
-    // r18's lesson: the build/probe splits and streaming rows were
-    // measured ONCE, outside the rep fold — a contended driver minute
-    // on exactly those rows fabricated a 10.8× dd11b "regression" that
-    // cost an independent full-bench rerun to disprove. Every emitted
-    // row now folds the same way: `reps` observations, lower-median
-    // record, per-rep singles in BENCH_DETAIL.json (`side_reps`),
-    // min/spread feeding batch_min and the contention flag. st02's
-    // sweep is the one exception — its wall clock is dominated by
-    // waiting on the rate source to produce load, so triplicating it
-    // would double the whole bench for no engine signal; it records a
-    // calib stamp taken immediately before and after its single
-    // measurement window instead (`sweep_calib` in BENCH_DETAIL.json),
-    // so a reader can see the host state the sweep ran under.
-    val sideObs = collection.mutable.LinkedHashMap
-      .empty[String, collection.mutable.ArrayBuffer[Double]]
-    def recordSide(obs: Seq[Seq[(String, Double)]]): Seq[(String, Double)] = {
-      obs.flatten.foreach { case (k, v) =>
-        sideObs.getOrElseUpdate(k,
-          collection.mutable.ArrayBuffer.empty[Double]) += v
-      }
-      foldSideReps(obs)
-    }
-
-    // IVF build/probe asymmetry: the registered ann02 row above paid a
-    // cold build + probe (fresh session, empty index memo). These two
-    // rows isolate the split a production deployment lives on — build
-    // once (fresh dir each rep, full train+assign+persist) vs
-    // probe-many (memo-hit probe against the already-persisted index —
-    // the memo populated by the batch loop's ann02 run on this same
-    // session, which is why the reps share `spark` rather than a fresh
-    // session that would silently re-bill the build inside the probe).
-    val ivfSplit = recordSide((1 to reps).map { _ =>
-      var dir: String = null
-      try guardRows(Seq("ann02_ivf_build", "ann02_ivf_probe"), errors) {
-        dir = java.nio.file.Files.createTempDirectory("bench-ivf").toString
-        val t0 = System.nanoTime()
-        similarity.Similarity.buildIvfIndex(spark, sfDir, dir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        force(spark)(SparkEntry.queries("ann02_ivf_topk")(spark, sfDir))
-        val tProbe = (System.nanoTime() - t1) / 1e9
-        // no ann06 split row: the batch loop runs ann02 (cold build,
-        // populating the memo) before ann06 alphabetically, so the
-        // registered ann06 row is already a pure memo-hit probe
-        Seq("ann02_ivf_build" -> tBuild, "ann02_ivf_probe" -> tProbe)
-      } finally {
-        // don't leak an index-sized parquet copy per rep — including
-        // when the build or probe throws mid-way. Cleanup failure must
-        // not abort the bench (or mask the original error): log only.
-        try { if (dir != null) deleteDir(dir) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ivf cleanup failed: $e")
-        }
-      }
-    })
-    // the memo copy is evicted AFTER all reps (every probe rep is a
-    // memo-hit by design), so the run leaks neither parquet copy
-    try similarity.Similarity.evictIndex(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] ivf evict failed: $e")
-    }
-
-    // dd11 build/probe asymmetry, same reasoning as the IVF split:
-    // the registered dd11 row pays a cold LSH-index build (fresh
-    // session, empty memo) — these rows isolate what an ingest
-    // deployment actually repeats (the probe) from what it pays once.
-    // Each rep evicts first, so every build rep is genuinely cold.
-    val lshSplit = recordSide((1 to reps).map { r =>
-      guardRows(Seq("dd11_lsh_build", "dd11_lsh_probe"), errors) {
-        dedup.Dedup.evictLshIndex(spark, sfDir) // ensure a cold build
-        val t0 = System.nanoTime()
-        val idx = dedup.Dedup.lshIndexFor(spark, sfDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        force(spark)(SparkEntry.queries("dd11_incremental_lsh")(spark, sfDir))
-        val tProbe = (System.nanoTime() - t1) / 1e9
-        // informational, so stdout — a stderr line here surfaces as
-        // `[error] [bench] …` in the sbt tail and reads as a failure
-        // to log scrapers (brace-free by construction: `idx` is a
-        // temp-dir path — slashes and hex, so it can't disturb the
-        // harness's first-{-to-last-} JSON extraction either). Once,
-        // not per rep: every stdout char competes with the JSON line
-        // for the harness's tail window.
-        if (r == 1) println(s"bench info: dd11 probe used index $idx")
-        Seq("dd11_lsh_build" -> tBuild, "dd11_lsh_probe" -> tProbe)
-      }
-    })
-    try dedup.Dedup.evictLshIndex(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] lsh cleanup failed: $e")
-    }
-
-    // streaming flagship: the reference's word-count topology
-    // (tokenize -> keyed count -> top-N -> exactly-once sink) over the
-    // documents corpus, end to end through Structured Streaming —
-    // each rep on fresh input/output/checkpoint dirs
-    val streamResult = recordSide((1 to reps).map { _ =>
-      guardRows(Seq("st01_stream_wordcount"), errors) {
-        val t0 = System.nanoTime()
-        runStreaming(spark, sfDir)
-        Seq("st01_stream_wordcount" -> (System.nanoTime() - t0) / 1e9)
-      }
-    })
-
-    // st03: the SAME topology on the RocksDB state store — the row
-    // that records what the 100 TB-state posture costs relative to
-    // st01's heap-backed default on an identical workload
-    val rocksResult = recordSide((1 to reps).map { _ =>
-      guardRows(Seq("st03_rocksdb_wordcount"), errors) {
-        val t0 = System.nanoTime()
-        runStreaming(spark, sfDir, streaming.StateBackend.RocksDB)
-        Seq("st03_rocksdb_wordcount" -> (System.nanoTime() - t0) / 1e9)
-      }
-    })
-
-    // st02: sustained-throughput sweep — rate spout at increasing
-    // rows/s against both top-N sink modes (rows/s + per-batch
-    // latency land in the side field; the wall cost joins the query
-    // map so the total stays honest). Single-shot (see the side-row
-    // discipline note above) with a calib stamp on each edge of its
-    // measurement window.
-    val sweepCalib = collection.mutable.ArrayBuffer.empty[Double]
-    def stampCalib(): Unit =
-      try {
-        val t0 = System.nanoTime()
-        force(spark)(calibWorkload(spark))
-        sweepCalib += (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] sweep calib stamp failed: $e")
-      }
-    var thrRows = Seq.empty[streaming.ThroughputHarness.SweepStage]
-    val thrSecs = recordSide(Seq(
-      guardRows(Seq("st02_throughput_sweep"), errors) {
-        stampCalib()
-        val t0 = System.nanoTime()
-        thrRows = mutedBroadcastLogs { streaming.ThroughputHarness.sweep(spark) }
-        val secs = (System.nanoTime() - t0) / 1e9
-        stampCalib()
-        Seq("st02_throughput_sweep" -> secs)
-      }))
-    // side-row trust vector: best observation + spread per side row,
-    // folded into batch_min and the contention flag exactly like the
-    // batch rows' rep statistics
-    val sideMin: Map[String, Double] =
-      sideObs.map { case (k, vs) => k -> vs.min }.toMap
-    val sideSpread: Map[String, Double] =
-      sideObs.map { case (k, vs) => k -> (vs.max - vs.min) }.toMap
-
-    // ---- self-healing re-measure under contention ----
-    // BENCH_r12 AND BENCH_r13 both committed records whose medians
-    // misstated contention-flagged rows by up to 4.9× while batch_min
-    // proved the code itself was fine — the flags did their
-    // self-describing job, but a committed record that misstates
-    // steady-state poisons round-to-round comparison anyway. The
-    // record now heals itself: at the END of the run (the transient
-    // contention that skewed early reps has had the whole run to
-    // pass) every flagged row — and every repeated row, when the
-    // WHOLE run looks contended (median-sum > ~1.15× min-sum, the
-    // globally-slow-rep shape no per-row gate catches) — is
-    // re-measured once on a fresh cold-data session, and the recorded
-    // row becomes min(median, re-measure): the least-contended FULL
-    // observation of the same cold-data plan, never a partial or
-    // warm-data shortcut. Pre-heal medians and heal singles both land
-    // in BENCH_DETAIL.json; stdout lists the healed keys. A row still
-    // contention-flagged AFTER healing stays flagged — that is the
-    // record saying "quiet state not reached, distrust me here".
-    // the trigger ratio is env-tunable (default 1.15) so a harness can
-    // force the full-registry heal (=1.0) or disable it (huge) without
-    // a code change; the default matches the batch/batch_min trust
-    // threshold the record documents
-    val healRatio = sys.env.get("SPARK_GRAFT_BENCH_HEAL_RATIO")
-      .flatMap(_.toDoubleOption).getOrElse(1.15)
-    val runContended = runLooksContended(batchResults, minRows, healRatio)
-    val healKeys: Seq[String] =
-      if (runContended) batchResults.map(_._1) else contended
-    val (healMeasured, healErrors): (Map[String, Double], Map[String, String]) =
-      if (healKeys.isEmpty) (Map.empty, Map.empty)
-      else {
-        val sess = warm.newSession()
-        sess.catalog.clearCache() // cold data, like every rep
-        System.gc()
-        val keySet = healKeys.toSet
-        val (rows, errs) =
-          timeAll[(SparkSession, String) => org.apache.spark.sql.DataFrame](
-            SparkEntry.queries.toSeq.filter(kv => keySet(kv._1)).sortBy(_._1),
-            fn => force(sess)(fn(sess, sfDir)))
-        operators.MergeTable.cleanupFixtures()
-        (healObservations(rows, errs), errs)
-      }
-    val (healedBatch, healedKeys) = healRows(batchResults, healMeasured)
-    // heal observations fold into the per-row best, so batch_min stays
-    // the floor of everything actually observed
-    val minRowsFinal = minRows.map { case (k, mn) =>
-      k -> healMeasured.get(k).fold(mn)(math.min(mn, _)) }
-    // the contention flag re-evaluates AGAINST the healed record: a
-    // key listed here survived its re-measure still far above its
-    // best observation — re-measure on a quiet machine before
-    // trusting it. Side rows carry the same flag off their own reps
-    // (they are never healed — the flag alone says "distrust here").
-    val sideRows = ivfSplit ++ lshSplit ++ streamResult ++ rocksResult
-    val contendedFinal =
-      (contendedKeys(healedBatch, minRowsFinal) ++
-        contendedKeys(sideRows, sideMin)).sorted
-
-    val results = healedBatch ++ sideRows ++ thrSecs
+    val results = medianRows(repResults)
     val total = results.map(_._2).sum
-    // what a fully-uncontended run would have recorded for the batch
-    // figure: best-observed seconds for the repeated rows — batch AND
-    // side. batch >> batch_min says "distrust this round's medians"
-    // without needing BENCH_DETAIL archaeology.
-    val batchMinSecs = (healedBatch.map { case (k, _) => minRowsFinal(k) } ++
-      sideRows.map { case (k, _) => sideMin(k) }).sum
-    // engine time without the throughput sweep — the sweep's wall
-    // clock is dominated by waiting on the rate source to produce
-    // load, not by engine work, so it would distort a total-seconds
-    // comparison across rounds
-    val batchSecs = (healedBatch ++ sideRows).map(_._2).sum
+    // -1 sentinel when the calib itself failed (its error row already
+    // drives exit 1, but the field must stay numeric)
+    val calibMed = if (calibTimes.isEmpty) -1.0 else lowerMedian(calibTimes.toSeq)
 
-    // The harness that consumes this output keeps only the LAST
-    // ~2000 chars of the build log and parses the JSON line out of
-    // that window; with 80+ full-name entries at Double.toString
-    // precision the line runs ~2900 chars and its head falls outside
-    // the window (rounds 1-4 recorded parsed:null). The stdout line
-    // therefore uses SHORT query keys — the unique name prefix before
-    // the first '_' (q01_wordcount → q01, dd02_ngram_jaccard → dd02;
-    // ann02's build/probe rows disambiguate as ann02b/ann02p) — and
-    // centisecond precision. The full-name, full-precision record
-    // still exists: stderr + ./BENCH_DETAIL.json.
-    def shortKey(k: String): String = Bench.shortKey(k)
-    // %f via String.format is locale-sensitive (comma decimal
-    // separator corrupts JSON) — pin Locale.ROOT
-    def fmt(v: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
-    val shorts = results.map { case (k, v) => shortKey(k) -> v }
-    // short keys are unique today; if a future operator breaks that,
-    // fall back to full names rather than silently merging rows
-    val keyed = if (shorts.map(_._1).distinct.size == results.size) shorts else results
-    // centisecond precision below 10 s, decisecond above: 0.01 s on a
-    // 10+ s row is 0.1% noise, and the saved char per big row is what
-    // keeps the worst-case line inside the parse window (BenchKeysSpec
-    // models 4 chars per value). The cut is at 9.995, not 10: a value
-    // in [9.995, 10) rounds to the 5-char "10.00" at two decimals,
-    // which would quietly break the model's guarantee.
-    val qs = keyed.map { case (k, v) => "\"" + k + "\":" + fmt(v, if (v >= 9.995) 1 else 2) }
-      .mkString("{", ",", "}")
-    // stdout carries the sweep's MEDIAN rps vector (same shape as
-    // r11's single-pass record, so rounds stay comparable) plus the
-    // per-stage best — batch's `batch_min` discipline applied to the
-    // rate sweep; mode/target/latency/per-rep rows live in
-    // BENCH_DETAIL.json. Every char here competes with query rows
-    // for the harness's 2000-char window.
-    val thrJson = thrRows.map(r => math.round(r.medianRps).toString)
-      .mkString("[", ",", "]")
-    val thrBestJson = thrRows.map(r => math.round(r.bestRps).toString)
-      .mkString("[", ",", "]")
-    // Failed queries must be VISIBLE: a throwing query's wall time is
-    // a no-op, not a result. stdout carries the failed short keys (so
-    // the harness-parsed record shows them), BENCH_DETAIL the full
-    // messages, and the process exits nonzero — a regression of the
-    // r7 shape (13 broken queries billing 0.05 s each) can no longer
-    // masquerade as an improvement.
-    def jstr(s: String): String = Bench.jstr(s)
-    // only present when something failed — and CAPPED like contended
-    // (names while ≤5 fail, a count-only `errors_n` past that): a
-    // mass-failure run is exactly the record that must stay parseable,
-    // and the field's job on stdout is visibility (the nonzero exit
-    // and BENCH_DETAIL's full messages carry the specifics). The
-    // shedding ladder never touches this field.
-    val errShorts =
-      cappedField("errors", errors.keys.toSeq.sorted.map(shortKey))
-    // contended/healed ride stdout as ALWAYS-PRESENT counts (r22):
-    // `contended_n` and `healed` are emitted even when 0, so the
-    // parsed record carries a FIXED field set run to run — r21's
-    // record omitted `contended` entirely on a clean run and the
-    // driver's PERF parser recorded parsed:null on both r20 and r21.
-    // The named `contended` key list additionally rides while short
-    // (≤5 keys); the full lists live in BENCH_DETAIL.json either way.
-    // `contended` is the POST-heal verdict (what a reader must still
-    // distrust); `healed` the COUNT of rows the end-of-run re-measure
-    // corrected (keys in BENCH_DETAIL.json).
-    // no separate rps_contended ids on stdout: `rps` (medians) and
-    // `rps_best` ride the line on every run the budget admits, so the
-    // per-stage contention ratio is directly computable by any reader
-    // — under extreme budget pressure the shed ladder drops rps_best,
-    // then rps (see assembleLine; both always live in
-    // BENCH_DETAIL.json, as does the explicit per-stage flag).
+    def rowsJson(rows: Seq[(String, Double)]): String =
+      rows.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val errFull = errors.toSeq.sortBy(_._1)
       .map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fullThr = thrRows.map(_.json).mkString("[", ",", "]")
-    // per-rep singles: the medians above are the record, but a reader
-    // diagnosing a noisy round needs the raw passes
-    val repJson = repResults.map(rows =>
-      rows.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"))
-      .mkString("[", ",", "]")
-    def mapJson(m: Map[String, Double]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    val contFull = contendedFinal.map(jstr).mkString("[", ",", "]")
-    val contPreheal = contended.map(jstr).mkString("[", ",", "]")
-    val healedFull = healedKeys.map(jstr).mkString("[", ",", "]")
-    // the heal trail: pre-heal medians for the rows the heal changed,
-    // plus every end-of-run re-measurement as observed — a reader can
-    // reconstruct the unhealed record exactly
-    val prehealJson = mapJson(batchResults.toMap.view
-      .filterKeys(healedKeys.toSet).toMap)
-    val healJson = mapJson(healMeasured)
-    // heal-pass failures: non-fatal diagnostics (see the fold above)
-    val healErrJson = healErrors.toSeq.sortBy(_._1)
-      .map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-    // the calibration record: median (the round's denominator) + min
-    // + raw reps; -1 sentinel when the calib itself failed (the error
-    // row already drives exit 1, but the fields must stay numeric)
-    val calibMed = if (calibTimes.isEmpty) -1.0 else calibMedian(calibTimes.toSeq)
-    val calibMin = if (calibTimes.isEmpty) -1.0 else calibTimes.min
-    val calibRepsJson = calibTimes.mkString("[", ",", "]")
-    // side rows' per-rep singles (the `rep_queries` analog for the
-    // non-registry rows: every value actually observed, in rep order)
-    // plus the sweep's edge calib stamps — the r18 measurement hole,
-    // closed: no emitted row is single-shot without a calib record
-    // taken inside its own measurement window
-    val sideRepsJson = sideObs.toSeq
-      .map { case (k, vs) => "\"" + k + "\":" + vs.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val sweepCalibJson = sweepCalib.mkString("[", ",", "]")
-    // per-mode sustained-rps MEDIANS as NAMED fields (r22): the sweep
-    // stages previously lived only inside the streaming_throughput
-    // array — a reader comparing rounds had to index into it by
-    // position; these four fields name each (mode, target) directly
-    val rpsModeFields = thrRows.map(r =>
-      s""""rps_${r.mode}_${r.targetRps}":${math.round(r.medianRps)}""")
-      .mkString(",")
-    val rpsModes = if (rpsModeFields.isEmpty) "" else rpsModeFields + ","
-    // manifest-stats job fallbacks this run (r22): a footer-stats
-    // fallback re-scans every just-written byte — silent until now; a
-    // nonzero count here says some commit paid the slow stats pass
-    // (type outside the proven set, or a footer surprise)
-    val statsFallbacks = operators.MergeTable.statsJobFallbackCount
+    // a nonzero stats_fallbacks says some MergeTable commit paid the
+    // footer-stats re-scan of every just-written byte
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","batch_seconds":$batchSecs,"batch_min_seconds":$batchMinSecs,"bench_reps":$reps,"calib":$calibMed,"calib_min":$calibMin,"calib_reps":$calibRepsJson,"queries":$fullQs,"queries_min":${mapJson(minRowsFinal ++ sideMin)},"queries_spread":${mapJson(spreadRows ++ sideSpread)},"contended":$contFull,"contended_preheal":$contPreheal,"healed":$healedFull,"queries_preheal":$prehealJson,"queries_heal":$healJson,"heal_errors":$healErrJson,"run_contended":$runContended,"errors":$errFull,"rep_queries":$repJson,"side_reps":$sideRepsJson,"sweep_calib":$sweepCalibJson,${rpsModes}"stats_fallbacks":$statsFallbacks,"streaming_throughput":$fullThr,"sf":"$sfDir"}"""
-    // detail goes to the FILE only — r4-r7 all recorded parsed:null
-    // because this JSON also went to stderr, whose truncated copy
-    // landed inside the harness's 2000-char tail window just before
-    // the stdout line and broke its first-{-to-last-} extraction
+      s"""{"metric":"total","value":$total,"unit":"sec","bench_reps":$reps,"calib":$calibMed,"calib_reps":${calibTimes.mkString("[", ",", "]")},"queries":${rowsJson(results)},"errors":$errFull,"rep_queries":${repResults.map(rowsJson).mkString("[", ",", "]")},"stats_fallbacks":${operators.MergeTable.statsJobFallbackCount},"sf":${jstr(sfDir)}}"""
     try java.nio.file.Files.writeString(java.nio.file.Path.of("BENCH_DETAIL.json"), detail + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
 
-    // stop BEFORE printing the parse-target line: SparkContext
-    // teardown logs asynchronously, and anything it emits after the
-    // JSON pushes the line's head out of the harness's tail window.
-    // Teardown also emits spurious ERROR lines (async TorrentBroadcast
-    // cleanup racing executor shutdown — r10's record carried one and
-    // it read as contamination evidence); every REAL failure is
-    // already captured in `errors` by the guards above, so the logger
-    // goes silent for the teardown itself.
-    spark.sparkContext.setLogLevel("OFF")
-    scala.util.Try(spark.stop())
-    // non-contract fields carry SHORT names on the stdout line (the
-    // full names live in BENCH_DETAIL.json): the registry's growth
-    // eats the harness's 2000-char tail window, and BenchKeysSpec
-    // fails the build when the worst-case line crowds it
-    val sfShort = sfDir.split('/').lastOption.getOrElse(sfDir)
-    val line = assembleLine(
-      s"""{"metric":"total","value":${fmt(total, 1)},"unit":"sec",""",
-      s""""batch":${fmt(batchSecs, 1)},"batch_min":${fmt(batchMinSecs, 1)},"reps":$reps,"calib":${fmt(calibMed, if (calibMed >= 9.995) 1 else 2)},""",
-      s""""queries":$qs,""",
-      errShorts, contendedFinal.map(shortKey), healedKeys.size,
-      thrJson, thrBestJson, sfShort)
-    // the IDENTICAL line lands in a bare file too (r22): both r20 and
-    // r21 driver runs printed the line yet recorded parsed:null — the
-    // stdout copy is sbt-decorated (`[info] ` prefix) and competes
-    // with the log tail for the parse window, so the contract line
-    // also exists undecorated where no log can crowd it
-    try java.nio.file.Files.writeString(
-      java.nio.file.Path.of("BENCH_LINE.json"), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] line-file write failed: $e") }
-    println(line)
+    // stop BEFORE printing the line, with the logger silenced: context
+    // teardown logs asynchronously (and spuriously — broadcast cleanup
+    // racing executor shutdown), and every real failure is already in
+    // `errors`
+    warm.sparkContext.setLogLevel("OFF")
+    scala.util.Try(warm.stop())
+    println(stdoutLine(total, reps, calibMed, results, errors.keys.toSeq, sfDir))
     System.out.flush()
     if (errors.nonEmpty) {
       System.err.println(s"[bench] ${errors.size} row(s) FAILED: " +
@@ -540,18 +127,13 @@ object Bench {
     * input (`spark.range`, zero IO), a pure-CPU xxhash64 chain, and
     * exactly ONE shuffle (a 4096-bucket aggregate) — whose plan never
     * changes round to round, so its measured seconds vary only with
-    * the HOST (contention, CPU frequency, JIT state). Three straight
-    * verdicts spent space pattern-matching ±15-30% per-row swings on
-    * untouched code against host drift; `calib` turns that argument
-    * into one division — compare rounds by row_time/calib, not raw
-    * seconds (the rule is recorded in PLANS.md). Deterministic by
-    * construction (range + xxhash64, no sampling, no time), so the
-    * calibration can never drift for a data reason. Deliberately NOT
-    * part of `total`/`batch` (it measures the machine, not the
-    * engine) and never healed (its whole job is to RECORD the run's
-    * contention, which the heal pass exists to erase).
+    * the HOST (contention, CPU frequency, JIT state). Compare rounds by
+    * row_time/calib, not raw seconds. Deterministic by construction
+    * (range + xxhash64, no sampling, no time), so the calibration can
+    * never drift for a data reason. Deliberately NOT part of `total`
+    * (it measures the machine, not the engine).
     */
-  private[graft] def calibWorkload(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+  private[graft] def calibWorkload(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
     val base = spark.range(0L, 96L * 1000 * 1000, 1L, 64)
     val hashed = (1 to 8).foldLeft(base.select(col("id"), col("id").as("h"))) {
@@ -573,14 +155,10 @@ object Bench {
     xs((xs.size - 1) / 2)
   }
 
-  private[graft] def calibMedian(times: Seq[Double]): Double =
-    lowerMedian(times)
-
   /** Run every (name, fn) through `run`, timing each; a throwing
     * query records its elapsed time AND lands in the error map — the
     * caller decides how to surface it, but it can never silently read
-    * as a fast row. Factored out of main so BenchKeysSpec can assert
-    * the failure contract directly.
+    * as a fast row.
     */
   private[graft] def timeAll[A](
       queries: Seq[(String, A)], run: A => Unit)
@@ -598,173 +176,6 @@ object Bench {
     (results, errors.toMap)
   }
 
-  /** Run a side-row body, recording any failure in `errors` under
-    * EVERY row name the body would have produced — a broken split or
-    * streaming flagship surfaces as error rows driving exit 1, never
-    * as silently-missing rows with rc 0 (the last seam of the r7
-    * failure class). Factored so BenchKeysSpec can assert the
-    * contract directly.
-    */
-  private[graft] def guardRows(
-      names: Seq[String],
-      errors: collection.mutable.Map[String, String])(
-      body: => Seq[(String, Double)]): Seq[(String, Double)] =
-    try body
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] ${names.mkString("/")} failed: $e")
-      names.foreach(n => errors(n) = String.valueOf(e).take(200))
-      Seq.empty
-    }
-
-  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** A capped stdout list field (`contended`): empty string when
-    * clean; the full key list while it fits (≤ `cap` keys — the
-    * common mildly-degraded run, where the reader wants the names);
-    * past the cap it collapses to a COUNT-ONLY `<field>_n` field —
-    * a saturated list is exactly the degraded run that must stay
-    * inside the harness's 2000-char parse window (r16 lesson: the
-    * old first-5-plus-`_more` shape outgrew the window's margin as
-    * bench keys accumulated). Distinct field name for the count form
-    * so a parser never sees one key with two types. The full lists
-    * live in BENCH_DETAIL.json either way.
-    */
-  private[graft] def cappedField(field: String, shortKeys: Seq[String],
-                                 cap: Int = 5): String =
-    if (shortKeys.isEmpty) ""
-    else if (shortKeys.size > cap) s""""${field}_n":${shortKeys.size},"""
-    else shortKeys.map(jstr).mkString("\"" + field + "\":[", ",", "],")
-
-  /** Assemble the stdout record line, shedding optional diagnostics
-    * when the assembled line would crowd the harness's 2000-char tail
-    * window (an sbt trailer of ~80 chars follows it).
-    *
-    * STABLE FIELDS (r22): `contended_n` and `healed` are always
-    * present as numbers — 0 included — so the parsed record carries a
-    * fixed field set run to run (the r20/r21 driver parses both
-    * recorded null; a field that appears only on degraded runs is
-    * exactly the drift a brittle parser trips on). The named
-    * `contended` key list additionally rides while short (≤5 keys).
-    *
-    * Ladder, applied only as needed: (1) the named contended list
-    * drops (the count stays); (2) `rps_best` drops; (3) `rps` drops;
-    * (4) the contended_n/healed counts drop; (5) the bench-internal
-    * diagnostics (`batch`/`batch_min`/`reps`/`calib`) drop last. The
-    * CONTRACT fields (metric/value/unit/queries/sf) and `errors` are
-    * NEVER shed — a failed row must stay visible in the parsed
-    * record, and the rows ARE the record — and everything shed is in
-    * BENCH_DETAIL.json verbatim. BenchKeysSpec drives the ladder on
-    * the synthetic worst case, so registry growth fails the build
-    * only when even the fully-shed line cannot fit.
-    */
-  private[graft] def assembleLine(prefix: String, diag: String, queriesField: String,
-      errShorts: String,
-      contendedShorts: Seq[String], healedCount: Int,
-      rps: String, rpsBest: String, sfShort: String,
-      budget: Int = 1900): String = {
-    val stable = s""""contended_n":${contendedShorts.size},"healed":$healedCount,"""
-    val named =
-      if (contendedShorts.nonEmpty && contendedShorts.size <= 5)
-        contendedShorts.map(jstr).mkString("\"contended\":[", ",", "],")
-      else ""
-    def mk(withDiag: Boolean, withStable: Boolean, namedCont: String,
-           withRps: Boolean, withBest: Boolean): String =
-      prefix + (if (withDiag) diag else "") + queriesField + errShorts +
-        (if (withStable) stable else "") + namedCont +
-        (if (withRps) "\"rps\":" + rps +
-          (if (withBest) ",\"rps_best\":" + rpsBest else "") + ","
-         else "") +
-        "\"sf\":\"" + sfShort + "\"}"
-    // eager Seq on purpose: all six candidate strings are a few KB
-    // built once per run — a lazy chain would imply a cost that isn't
-    // there and hide that rungs.last is always safe to take
-    val rungs: Seq[String] = Seq(
-      mk(withDiag = true, withStable = true, named, withRps = true, withBest = true),
-      mk(withDiag = true, withStable = true, "", withRps = true, withBest = true),
-      mk(withDiag = true, withStable = true, "", withRps = true, withBest = false),
-      mk(withDiag = true, withStable = true, "", withRps = false, withBest = false),
-      mk(withDiag = true, withStable = false, "", withRps = false, withBest = false),
-      mk(withDiag = false, withStable = false, "", withRps = false, withBest = false))
-    rungs.find(_.length <= budget).getOrElse(rungs.last)
-  }
-
-  /** Whether the WHOLE run looks contended (globally slow reps the
-    * per-row gates can't each catch): the medians' sum sits > 15%
-    * above the best-rep sum. This is the batch ≈ batch_min trust test
-    * the record tells its readers to apply, applied by the bench to
-    * itself — it triggers the full-registry heal pass.
-    */
-  private[graft] def runLooksContended(medians: Seq[(String, Double)],
-                                       mins: Map[String, Double],
-                                       ratio: Double = 1.15): Boolean = {
-    val minSum = medians.map { case (k, _) => mins(k) }.sum
-    minSum > 0 && medians.map(_._2).sum / minSum > ratio
-  }
-
-  /** The heal pass's usable observations: timed rows MINUS errored
-    * keys. A heal-pass failure is loud (stderr + `heal_errors` in
-    * BENCH_DETAIL.json) but must neither IMPROVE nor VETO the record:
-    * timeAll's elapsed for a throwing query is a partial run, not the
-    * "least-contended FULL observation" the fold promises, and every
-    * heal key already owns a valid median from the measured reps — so
-    * errored keys are dropped before folding and never reach the
-    * exit-1 error map. "Any-rep failure is loud" stays scoped to the
-    * measured reps.
-    */
-  private[graft] def healObservations(
-      rows: Seq[(String, Double)], errs: Map[String, String])
-      : Map[String, Double] = rows.toMap -- errs.keySet
-
-  /** Fold end-of-run re-measurements into the record: each healed row
-    * is min(median, re-measure) — the least-contended FULL cold-data
-    * observation — and the second component names exactly the rows
-    * the heal changed. A re-measure that came back SLOWER never
-    * worsens the record (that's the heal pass itself hitting
-    * contention, not new information about the plan).
-    */
-  private[graft] def healRows(medians: Seq[(String, Double)],
-                              remeasured: Map[String, Double])
-      : (Seq[(String, Double)], Seq[String]) = {
-    val healed = medians.map { case (k, med) =>
-      k -> remeasured.get(k).map(math.min(med, _)).getOrElse(med) }
-    val changed = healed.zip(medians)
-      .collect { case ((k, h), (_, m)) if h < m => k }
-    (healed, changed)
-  }
-
-  /** Rows whose median is clearly above their best rep — the
-    * machine-contention flag (r10's tx06: median 6.5 s vs best rep
-    * 1.8 s under a globally slow rep). Both gates must fire: median >
-    * 2× min (relative — a systematically contended rep, not plan
-    * variance) AND median − min > 0.25 s (absolute — a 30 ms row
-    * jittering to 70 ms is noise, not contention). A flagged row
-    * means "re-measure before treating this median as real", exactly
-    * the instruction r10's record could not carry.
-    */
-  private[graft] def contendedKeys(medians: Seq[(String, Double)],
-                                   mins: Map[String, Double]): Seq[String] =
-    medians.collect {
-      case (k, med) if mins.get(k).exists(mn =>
-        mn > 0 && med / mn > 2.0 && med - mn > 0.25) => k
-    }.sorted
-
-  /** [[medianRows]] for side-row observation sets, which (unlike the
-    * batch reps) can be partially or wholly empty: a guarded rep that
-    * threw contributed `Seq.empty` (its error already drives exit 1),
-    * and the fold must neither crash on an all-failed family nor let
-    * one failed rep erase the surviving observations — the first
-    * NON-EMPTY rep's key order anchors the output.
-    */
-  private[graft] def foldSideReps(
-      obs: Seq[Seq[(String, Double)]]): Seq[(String, Double)] = {
-    val ok = obs.filter(_.nonEmpty)
-    if (ok.isEmpty) Seq.empty else medianRows(ok)
-  }
-
   /** Per-query median across repeated passes (lower median for even
     * counts — an actually-observed value, not an interpolation). All
     * reps run the same sorted registry, so rows align by position;
@@ -779,101 +190,53 @@ object Bench {
     }
   }
 
-  /** Short stdout key — the unique name prefix before the first '_';
-    * the build/probe split rows (which share a query's prefix)
-    * disambiguate explicitly. BenchKeysSpec asserts the mapping stays
-    * collision-free over every name the bench can emit, so a clash
-    * can't silently reactivate the full-name fallback and push the
-    * stdout line back over the harness's 2000-char parse window.
+  /** The stdout record line. Query rows use SHORT keys (the unique
+    * name prefix before the first '_': q01_wordcount → q01) at
+    * centisecond precision below 10 s and decisecond above, so the
+    * line stays well inside a 2000-char log-tail window (BenchKeysSpec
+    * checks the worst case); the full-name, full-precision record is
+    * BENCH_DETAIL.json. Failed rows stay visible: their short keys
+    * ride `errors` while ≤5 fail, an `errors_n` count past that.
     */
-  private[graft] def shortKey(k: String): String = k match {
-    case "ann02_ivf_build" => "ann02b"
-    case "ann02_ivf_probe" => "ann02p"
-    case "dd11_lsh_build"  => "dd11b"
-    case "dd11_lsh_probe"  => "dd11p"
-    case other             => other.takeWhile(_ != '_')
+  private[graft] def stdoutLine(total: Double, reps: Int, calib: Double,
+      rows: Seq[(String, Double)], errorKeys: Seq[String], sfDir: String): String = {
+    // %f via String.format is locale-sensitive (comma decimal
+    // separator corrupts JSON) — pin Locale.ROOT
+    def fmt(v: Double, dec: Int): String =
+      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
+    // the cut is at 9.995, not 10: a value in [9.995, 10) rounds to
+    // the 5-char "10.00" at two decimals
+    def secs(v: Double): String = fmt(v, if (v >= 9.995) 1 else 2)
+    val shorts = rows.map { case (k, v) => shortKey(k) -> v }
+    // short keys are unique today; if a future operator breaks that,
+    // fall back to full names rather than silently merging rows
+    val keyed = if (shorts.map(_._1).distinct.size == rows.size) shorts else rows
+    val qs = keyed.map { case (k, v) => jstr(k) + ":" + secs(v) }.mkString("{", ",", "}")
+    val sf = sfDir.split('/').lastOption.getOrElse(sfDir)
+    s"""{"metric":"total","value":${fmt(total, 1)},"unit":"sec","reps":$reps,"calib":${secs(calib)},"queries":$qs,""" +
+      errorsField(errorKeys.sorted.map(shortKey)) + "\"sf\":" + jstr(sf) + "}"
   }
 
-  /** Every row name the bench can emit (the registered queries plus
-    * the split/streaming rows added in main) — the spec's ground
-    * truth for short-key uniqueness.
-    */
-  private[graft] def allBenchKeys: Seq[String] =
-    SparkEntry.queries.keys.toSeq ++ Seq(
-      "ann02_ivf_build", "ann02_ivf_probe",
-      "dd11_lsh_build", "dd11_lsh_probe",
-      "st01_stream_wordcount", "st02_throughput_sweep",
-      "st03_rocksdb_wordcount")
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
-  private def deleteDir(dir: String): Unit =
-    IndexLifecycle.deleteRecursively(dir)
-
-  /** TorrentBroadcast logs OFF around a streaming run/teardown only,
-    * restored to the root logger's current level after. Rationale:
-    * broadcast cleanup racing a stopping streaming query logs a
-    * cosmetic async ERROR (cleanup of an already-delivered block)
-    * that reads as contamination evidence in the harness tail —
-    * r11's record carried one — but the r12/r13 fix (OFF for the
-    * whole process) meant a GENUINE mid-run broadcast fault in the
-    * batch rows would fail its query with no log context at all.
-    * Scoping the mute to the streaming windows keeps both: quiet
-    * teardown, loud real faults. Residual risk: cleanup is async, so
-    * a line can still fire just after the window closes — cosmetic,
-    * and only the final teardown (globally OFF) borders the stdout
-    * parse window.
+  /** The stdout `errors` field: empty string when clean; the short
+    * keys while ≤5 failed; past that a COUNT-ONLY `errors_n` field, so
+    * a mass-failure run — exactly the record that must stay parseable
+    * — keeps a bounded line. Distinct field name for the count form so
+    * a parser never sees one key with two types.
     */
-  private def mutedBroadcastLogs[T](body: => T): T = {
-    val name = "org.apache.spark.broadcast.TorrentBroadcast"
-    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-    // restore must return the logger to INHERIT-from-root, not pin a
-    // copied root level: a pinned explicit LoggerConfig survives the
-    // teardown's setLogLevel("OFF") (which only touches the root
-    // config), un-muting exactly the async teardown ERROR this exists
-    // to keep out of the harness's stdout parse window. If an explicit
-    // config pre-existed (it doesn't in Spark's defaults, but a user
-    // log4j2 file could add one), put back its exact level instead.
-    val preExisting =
-      Option(ctx.getConfiguration.getLoggers.get(name)).map(_.getLevel)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      name, org.apache.logging.log4j.Level.OFF)
-    try body
-    finally preExisting match {
-      case Some(lvl) =>
-        org.apache.logging.log4j.core.config.Configurator.setLevel(name, lvl)
-      case None =>
-        ctx.getConfiguration.removeLogger(name)
-        ctx.updateLoggers()
-    }
-  }
+  private[graft] def errorsField(shortKeys: Seq[String]): String =
+    if (shortKeys.isEmpty) ""
+    else if (shortKeys.size > 5) s""""errors_n":${shortKeys.size},"""
+    else shortKeys.map(jstr).mkString("\"errors\":[", ",", "],")
 
-  /** One end-to-end run of the streaming word-count topology over the
-    * documents corpus, on fresh input/output/checkpoint dirs.
+  /** Short stdout key — the name prefix before the first '_'.
+    * BenchKeysSpec asserts the mapping stays collision-free over the
+    * registry.
     */
-  private def runStreaming(spark: SparkSession, sfDir: String,
-                           backend: streaming.StateBackend =
-                             streaming.StateBackend.Default): Unit =
-    mutedBroadcastLogs {
-      val inDir = java.nio.file.Files.createTempDirectory("bench-st-in").toString
-      val out = java.nio.file.Files.createTempDirectory("bench-st-out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("bench-st-ckpt").toString
-      var q: Option[org.apache.spark.sql.streaming.StreamingQuery] = None
-      try {
-        Tables.documents(spark, sfDir).select("text")
-          .coalesce(4).write.mode("overwrite").text(inDir)
-        q = Some(streaming.WordCountTopology.run(spark, inDir, out, ckpt, backend))
-        q.foreach(_.processAllAvailable())
-      } finally {
-        // stop BEFORE deleting: a processAllAvailable failure leaves
-        // the query active, and deleting its dirs under it would turn
-        // one guarded bench error into a run-long async error stream
-        q.foreach(x => scala.util.Try(x.stop()))
-        // reclaim the three temp trees (one holds a full text copy of
-        // the documents corpus) — the bench runs this four times per
-        // invocation, the same per-run leak class the throughput
-        // harness already sweeps for its own dirs
-        Seq(inDir, out, ckpt).foreach(d =>
-          scala.util.Try(IndexLifecycle.deleteRecursively(d)))
-      }
-    }
+  private[graft] def shortKey(k: String): String = k.takeWhile(_ != '_')
 }

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The local-mode session the harness mains (Verify, Explain,
-  * GenCorpus, Bench) run on: `local[cpus]`, shuffle partitions =
-  * cpus, UTC session time zone, UI off. Extra `conf` entries go
-  * through the builder, so sessions forked later with `newSession()`
-  * inherit them too.
+  * GenCorpus, Bench) and the CLI's own-session verbs run on:
+  * `local[cpus]`, shuffle partitions = cpus, UTC session time zone,
+  * UI off. Extra `conf` entries go through the builder, so sessions
+  * forked later with `newSession()` inherit them too.
   */
 object HarnessSession {
   def apply(cpus: String, logLevel: String,

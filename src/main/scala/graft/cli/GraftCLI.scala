@@ -80,13 +80,7 @@ object GraftCLI {
     * pointer-flip commit). Own-session wrapper, [[runSample]]'s shape.
     */
   def build(sfDir: String, outDir: String, shardSize: Int): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-build")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-build")
     try build(spark, sfDir, outDir, shardSize)
     catch {
       case u: Usage =>
@@ -190,6 +184,14 @@ object GraftCLI {
     if (v == "_") None
     else Some(v.toLongOption.getOrElse(v.toDoubleOption.getOrElse(v)))
 
+  /** The local session every own-session verb runs on: the harness
+    * mains' [[graft.HarnessSession]] at `SPARK_GRAFT_CPUS` (default 4),
+    * logging at WARN.
+    */
+  private def session(appName: String): SparkSession =
+    graft.HarnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "WARN",
+      "spark.app.name" -> appName)
+
   /** Table-format ops console (`GraftCLI table <cmd> …`): the
     * operational verbs for [[graft.operators.MergeTable]] dirs —
     * what an operator runs in a maintenance window (the reference CLI
@@ -202,13 +204,7 @@ object GraftCLI {
     */
   private def consoleMain(appName: String)(
       body: SparkSession => Seq[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(appName)
     try body(spark).foreach(println)
     catch {
       case u: Usage =>
@@ -534,25 +530,13 @@ object GraftCLI {
   }
 
   def emit(rowsPerSec: Int, update: Boolean): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-emit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-emit")
     try println(graft.streaming.ThroughputHarness.run(spark, update, rowsPerSec).json)
     finally spark.stop()
   }
 
   def runSample(file: String, outDir: String, update: Boolean): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-run-sample")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-run-sample")
     try runSample(spark, file, outDir, update)
     finally spark.stop()
   }
@@ -597,7 +581,7 @@ object GraftCLI {
       // the deliverable is outDir/top_words.txt; the staged input,
       // checkpoint and batch-output trees are intermediates that would
       // otherwise persist in the temp dir past process exit (the same
-      // leak class Bench.runStreaming and ThroughputHarness sweep)
+      // leak class ThroughputHarness.run sweeps)
       Seq(inDir.toString, ckpt, batchOut).foreach(d =>
         scala.util.Try(graft.IndexLifecycle.deleteRecursively(d)))
     }

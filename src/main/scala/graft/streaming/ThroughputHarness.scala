@@ -44,22 +44,24 @@ object ThroughputHarness {
     val topo =
       if (update) WordCountTopology.updateMode(spout, out, ckpt, topN)
       else WordCountTopology(spout, out, ckpt, topN)
-    val q = topo.run(spark)
-    val t0 = System.currentTimeMillis()
-    try {
-      while (q.exception.isEmpty &&
-             q.recentProgress.count(_.numInputRows > 0) < minBatches &&
-             System.currentTimeMillis() - t0 < timeoutMs)
-        Thread.sleep(100)
-    } finally {
-      q.stop()
-      // the measurement only needs the in-memory progress — reclaim
-      // the parquet snapshots + checkpoint, or a 12-run sweep leaks
-      // 24 temp trees per bench invocation (and per the ext4 note,
-      // /tmp dirs never shrink after entry peaks)
-      Seq(out, ckpt).foreach(d =>
-        scala.util.Try(graft.IndexLifecycle.deleteRecursively(d)))
-    }
+    val q =
+      try {
+        val q = topo.run(spark)
+        val t0 = System.currentTimeMillis()
+        try
+          while (q.exception.isEmpty &&
+                 q.recentProgress.count(_.numInputRows > 0) < minBatches &&
+                 System.currentTimeMillis() - t0 < timeoutMs)
+            Thread.sleep(100)
+        finally q.stop()
+        q
+      } finally {
+        // the measurement only needs the in-memory progress — reclaim
+        // the parquet snapshots + checkpoint, also when the query
+        // fails to start (/tmp dirs never shrink after entry peaks)
+        Seq(out, ckpt).foreach(d =>
+          scala.util.Try(graft.IndexLifecycle.deleteRecursively(d)))
+      }
     // a dead query must fail the measurement, not report 0 rows/s
     q.exception.foreach(throw _)
     // keep only entries that carry BOTH rows and a triggerExecution
@@ -77,85 +79,4 @@ object ThroughputHarness {
       meanBatchMs = if (progs.nonEmpty) execMs.toDouble / progs.length else 0.0,
       batches = progs.length, rows = rows)
   }
-
-  /** One sweep stage measured over repeated runs — the variance
-    * discipline the batch rows got in r11, applied to the rate sweep:
-    * a single-pass rps record can't distinguish a contended machine
-    * from a regression (r11's driver read 254k rows/s where quiet
-    * runs read 446k, with nothing in the artifact saying which to
-    * trust). `medianRps` is the record (lower median for even rep
-    * counts — an observed value), `bestRps` what an uncontended run
-    * would have recorded, and [[contended]] the re-measure flag.
-    */
-  final case class SweepStage(mode: String, targetRps: Int, reps: Seq[Result]) {
-    private def sorted = reps.map(_.sustainedRps).sorted
-    def medianRps: Double = if (reps.isEmpty) 0.0 else sorted((sorted.size - 1) / 2)
-    def bestRps: Double = if (reps.isEmpty) 0.0 else sorted.last
-    /** Both gates, mirroring Bench.contendedKeys with the inequality
-      * flipped for a higher-is-better metric: the best rep clearly
-      * above the median (relative) AND by enough rows/s to matter
-      * (absolute — rate-source jitter on a slow stage is noise).
-      */
-    def contended: Boolean =
-      medianRps > 0 && bestRps / medianRps > 1.5 && bestRps - medianRps > 25000
-    /** Reps whose measurement window closed with ZERO data batches —
-      * the run() timeout fired before the first data-carrying batch
-      * landed (a contended host can push an update-mode-at-rate first
-      * batch past the window). A 0 rps from such a rep is "nothing
-      * measured", not "measured zero": without this counter an
-      * all-timeout stage reads as a silent throughput collapse with
-      * `contended: false` (an r18 close-out bench hit exactly that).
-      */
-    def timeouts: Int = reps.count(_.batches == 0)
-    def json: String =
-      s"""{"mode":"$mode","target_rps":$targetRps,""" +
-        s""""median_rps":${math.round(medianRps)},"best_rps":${math.round(bestRps)},""" +
-        s""""contended":$contended,"timeouts":$timeouts,""" +
-        s""""reps":${reps.map(_.json).mkString("[", ",", "]")}}"""
-  }
-
-  /** The bench sweep: both sink modes at increasing target rates,
-    * each stage repeated UP TO `reps` times (SPARK_GRAFT_ST02_REPS,
-    * default 3 like the batch rows) within a PER-STAGE WALL BUDGET
-    * (SPARK_GRAFT_ST02_STAGE_BUDGET_MS, default 25 s). The sweep's
-    * wall clock is dominated by waiting on the rate source to produce
-    * load — not engine work — and it GREW with core count (r21:
-    * 147.8 s at 32 cores vs 52.7 s at 8, inverted scaling), so the
-    * budget bounds it: each stage always gets its FIRST rep (with the
-    * 0-batch retry), later reps run only while the stage is inside
-    * its budget. Declared worst case: 4 stages × (budget + one
-    * in-flight run ≤ 60 s retry window) ≈ 6 minutes at any core
-    * count; the typical quiet-host sweep is unchanged (3 reps × ~5 s
-    * per stage sits inside the budget). A budget-trimmed stage simply
-    * records fewer reps — visible in BENCH_DETAIL's per-rep arrays.
-    */
-  def sweep(spark: SparkSession,
-            reps: Int = sys.env.get("SPARK_GRAFT_ST02_REPS")
-              .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(3),
-            stageBudgetMs: Long = sys.env.get("SPARK_GRAFT_ST02_STAGE_BUDGET_MS")
-              .flatMap(_.toLongOption).filter(_ > 0).getOrElse(25000L)): Seq[SweepStage] =
-    for {
-      update <- Seq(false, true)
-      rps <- Seq(100000, 500000)
-    } yield SweepStage(
-      mode = if (update) "update" else "complete",
-      targetRps = rps,
-      reps = {
-        val t0 = System.currentTimeMillis()
-        (1 to reps).flatMap { i =>
-          if (i > 1 && System.currentTimeMillis() - t0 > stageBudgetMs) None
-          else Some {
-            val first = run(spark, update, rps)
-            // a 0-batch rep measured NOTHING (window closed before the
-            // first data batch — contended-host startup can exceed 20 s
-            // at rate in update mode): one bounded retry at a 3× window
-            // is the honest heal (budget permitting); a second 0 stays 0
-            // and is counted by SweepStage.timeouts rather than read as
-            // zero throughput
-            if (first.batches > 0 ||
-                System.currentTimeMillis() - t0 > stageBudgetMs) first
-            else run(spark, update, rps, timeoutMs = 60000)
-          }
-        }
-      })
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** The reference's flagship sample (WordCountSample.hs): words spout →
   * count bolt (hash-grouped) → top-N bolt → merge-sort bolt → file
@@ -84,16 +84,6 @@ object WordCountTopology {
       .option("rowsPerSecond", rowsPerSecond.toString)
       .options(limit.options).load()
       .selectExpr(s"concat('w', CAST(value % $vocab AS STRING)) AS value"))
-
-  /** Run over a directory of text files — the `run_sample` CLI analog.
-    * `stateBackend` picks the state-store engine for the count bolt
-    * (RocksDB = the 100 TB-state posture; see [[StateBackend]]).
-    */
-  def run(spark: SparkSession, inDir: String, outDir: String,
-          checkpoint: String,
-          stateBackend: StateBackend = StateBackend.Default): StreamingQuery =
-    apply(fileSpout(inDir), outDir, checkpoint)
-      .withStateBackend(stateBackend).run(spark)
 }
 
 /** Event-time operators over streams — watermarks are the low-water

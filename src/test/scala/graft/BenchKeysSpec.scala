@@ -2,194 +2,37 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's stdout contract: the harness that consumes it keeps
-  * only the last ~2000 chars of the build log and parses the JSON
-  * line out of that window. These checks fail at build time — not
-  * silently at round's end — if a new operator breaks the short-key
-  * mapping or grows the line past the window.
+/** The bench's stdout contract: one JSON line that a reader keeping
+  * only the last ~2000 chars of the run log can still parse. These
+  * checks fail at build time — not silently at a run's end — if a new
+  * operator breaks the short-key mapping or grows the line past the
+  * window.
   */
 class BenchKeysSpec extends AnyFunSuite {
 
   test("bench short keys are collision-free over every emittable row") {
-    val keys = Bench.allBenchKeys
-    val collided = keys.groupBy(Bench.shortKey).filter(_._2.size > 1)
-    assert(collided.isEmpty,
-      s"short-key collisions (add explicit cases in Bench.shortKey): $collided")
-  }
-
-  test("bench side rows are exactly the ones main emits") {
-    // allBenchKeys DERIVES from the registry (so registry ⊆ it holds
-    // by construction — asserting that would be tautological); the
-    // part that CAN drift is its hand-listed side-row tail vs the row
-    // names Bench.main actually emits. This spec pins that tail as a
-    // literal: adding a split/streaming row in main without extending
-    // allBenchKeys would silently re-open the short-key-collision
-    // blind spot, and this copy is the tripwire.
-    val sideRows = Bench.allBenchKeys.toSet -- SparkEntry.queries.keySet
-    assert(sideRows == Set(
-      "ann02_ivf_build", "ann02_ivf_probe",
-      "dd11_lsh_build", "dd11_lsh_probe",
-      "st01_stream_wordcount", "st02_throughput_sweep",
-      "st03_rocksdb_wordcount"),
-      s"allBenchKeys side rows drifted: $sideRows")
+    val collided = SparkEntry.queries.keys.groupBy(Bench.shortKey).filter(_._2.size > 1)
+    assert(collided.isEmpty, s"short-key collisions: $collided")
   }
 
   test("worst-case stdout JSON line fits the harness's 2000-char window") {
-    // envelope + sustained_rps sizes from the emitted format;
-    // per row: "key":xx.xx, (quotes, colon, comma) = len(key) + 9.
-    // Two-digit seconds is the honest worst case: a single
-    // THREE-digit row means a >100 s query at sf0.1 — a stalled round
-    // whose bench line is moot — and the observed full-line size
-    // (~1575 chars at 122 rows) sits well under this estimate.
-    // construct the literal worst-case clean-run line (every query at
-    // a two-digit 99.99 s — a three-digit row means a stalled round
-    // whose bench line is moot; errors field omitted on clean runs by
-    // construction) and require it plus sbt's trailer to fit
-    // errors and contended are omitted on clean runs by construction;
-    // rows ≥10 s print one decimal (99.9 is the two-digit worst case)
-    val qs = Bench.allBenchKeys.map(k => "\"" + Bench.shortKey(k) + "\":99.9")
-      .mkString("{", ",", "}")
+    // every registered query at a two-digit 99.9 s (rows ≥10 s print
+    // one decimal; a three-digit row means a >100 s query at sf0.1 —
+    // a stalled run whose line is moot), plus the longest named
+    // errors field, built by the SAME emit path main uses
+    val rows = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 99.9)
+    val longest5 = SparkEntry.queries.keys.toSeq.sortBy(k => -Bench.shortKey(k).length).take(5)
+    val line = Bench.stdoutLine(rows.map(_._2).sum, 99, 99.9, rows, longest5, "/data/sf0.1")
     val sbtTrailer = 80 // "[success] Total time: ..." after our line
-    // the clean worst case goes through the SAME emit path main uses
-    // (r18: at 141 registered rows the unshedded all-99.9 line crossed
-    // the budget, so the ladder — not line-construction luck — is what
-    // guarantees the fit; a clean run under pressure sheds rps_best,
-    // which lives verbatim in BENCH_DETAIL.json)
-    val cleanPrefix = """{"metric":"total","value":9999.9,"unit":"sec","""
-    val diag = """"batch":9999.9,"batch_min":9999.9,"reps":99,"calib":99.9,"""
-    val queriesField = s""""queries":$qs,"""
-    val cleanRps = "[999999,999999,999999,999999]"
-    val clean = Bench.assembleLine(cleanPrefix, diag, queriesField,
-      "", Nil, 0, cleanRps, cleanRps, "sf0.1")
-    assert(clean.length + sbtTrailer < 2000,
-      s"worst-case clean line + trailer ${clean.length + sbtTrailer} chars crowds the 2000-char parse window")
-    // a clean run's line still carries the stable count fields (r22:
-    // field presence must not vary run to run — the driver's parser
-    // failed on exactly that drift in r20/r21)
-    assert(clean.contains(""""contended_n":0""") && clean.contains(""""healed":0"""))
-    // DEGRADED worst case goes through the emit path itself:
-    // assembleLine's shedding ladder (named contended → count-only →
-    // drop rps_best) must land even the saturated-diagnostics line
-    // inside the window. Saturate EVERY diagnostic at its longest
-    // form: errors capped at 5 named keys (the ladder never sheds
-    // them), contended at the named-form cap with the 5 longest real
-    // short keys, plus the healed count field.
-    val longest5 = Bench.allBenchKeys.map(Bench.shortKey)
-      .sortBy(-_.length).take(5)
-    val errWorst = Bench.cappedField("errors", longest5)
-    val rps = "[999999,999999,999999,999999]"
-    val degraded = Bench.assembleLine(cleanPrefix, diag, queriesField,
-      errWorst, longest5,
-      134, rps, rps, "sf0.1")
-    assert(degraded.length + sbtTrailer < 2000,
-      s"degraded bench line + trailer ${degraded.length + sbtTrailer} chars crowds the parse window")
+    assert(line.length + sbtTrailer < 2000,
+      s"worst-case line + trailer ${line.length + sbtTrailer} chars crowds the 2000-char parse window")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("queries").size == SparkEntry.queries.size)
+    assert(json.get("errors").size == 5 && json.get("sf").asText == "sf0.1")
     // the mass-failure record parses too: >cap errors collapse to the
     // bounded errors_n count, never an unbounded name list
-    assert(Bench.cappedField("errors", (1 to 60).map(i => s"q$i")) ==
+    assert(Bench.errorsField((1 to 60).map(i => s"q$i")) ==
       """"errors_n":60,""")
-  }
-
-  test("heal folds a re-measure in by min, never worsens, and names what changed") {
-    val medians = Seq("a" -> 4.0, "b" -> 2.0, "c" -> 1.0)
-    val (healed, changed) = Bench.healRows(medians,
-      Map("a" -> 1.5, // genuine heal: records 1.5
-          "b" -> 3.0, // heal pass itself contended: keeps 2.0
-          "x" -> 9.9)) // unknown key: ignored
-    assert(healed == Seq("a" -> 1.5, "b" -> 2.0, "c" -> 1.0))
-    assert(changed == Seq("a"))
-    // no re-measure → record passes through untouched
-    val (same, none) = Bench.healRows(medians, Map.empty)
-    assert(same == medians && none.isEmpty)
-  }
-
-  test("an errored heal re-measure never enters the record (partial runs can't fold)") {
-    // timeAll bills elapsed seconds even for a throwing query — a heal
-    // pass that crashed 0.1 s in must not min-fold that partial time
-    // into the healed row or queries_min (the r14 ADVICE low)
-    val rows = Seq("a" -> 0.1, "b" -> 1.2)
-    val usable = Bench.healObservations(rows, Map("a" -> "boom"))
-    assert(usable == Map("b" -> 1.2), s"errored key leaked: $usable")
-    // composed with the fold: the errored key keeps its median, the
-    // clean key heals — and a heal error alone changes nothing
-    val medians = Seq("a" -> 4.0, "b" -> 2.0)
-    val (healed, changed) = Bench.healRows(medians, usable)
-    assert(healed == Seq("a" -> 4.0, "b" -> 1.2) && changed == Seq("b"))
-    assert(Bench.healObservations(rows, rows.toMap.map { case (k, _) =>
-      k -> "err" }).isEmpty)
-  }
-
-  test("the whole-run contention gate is the batch/batch_min > 1.15 trust test") {
-    val medians = Seq("a" -> 2.0, "b" -> 2.0)
-    // 4.0 vs 3.0 best-sum = 1.33x: globally contended even though no
-    // single row trips the per-row 2x gate
-    assert(Bench.runLooksContended(medians, Map("a" -> 1.5, "b" -> 1.5)))
-    // 4.0 vs 3.8 = 1.05x: trustworthy
-    assert(!Bench.runLooksContended(medians, Map("a" -> 1.9, "b" -> 1.9)))
-    // degenerate zero best-sum never divides
-    assert(!Bench.runLooksContended(Seq("a" -> 1.0), Map("a" -> 0.0)))
-  }
-
-  test("the stdout contended count is always present; names ride up to the cap") {
-    val prefix = """{"metric":"total","value":1.0,"unit":"sec","""
-    def line(keys: Seq[String]) = Bench.assembleLine(prefix, "",
-      """"queries":{},""", "", keys, 0, "[1]", "[1]", "sf")
-    // clean run: count 0, no named list — field presence is stable
-    assert(line(Nil).contains(""""contended_n":0"""))
-    assert(!line(Nil).contains(""""contended":["""))
-    // short list: both the count and the names
-    val two = line(Seq("a", "b"))
-    assert(two.contains(""""contended_n":2""") &&
-      two.contains(""""contended":["a","b"]"""))
-    // past the cap: count-only — the field length is bounded no
-    // matter how degraded the run; full keys ride BENCH_DETAIL.json
-    val many = line((1 to 500).map(i => s"q$i"))
-    assert(many.contains(""""contended_n":500""") &&
-      !many.contains(""""contended":["""))
-  }
-
-  test("assembleLine sheds diagnostics only under pressure, errors never") {
-    val prefix = """{"metric":"total","value":1.0,"unit":"sec","""
-    val diag = """"batch":1.0,"calib":1.0,"""
-    val rps = "[1,2]"
-    def line(budget: Int) = Bench.assembleLine(prefix, diag,
-      """"queries":{},""", """"errors":["x"],""",
-      Seq("a", "b"), 2, rps, rps, "sf", budget)
-    // roomy budget: named contended + rps_best both present
-    val full = line(2000)
-    assert(full.contains(""""contended":["a","b"]""") && full.contains("rps_best"))
-    assert(full.contains(""""contended_n":2""") && full.contains(""""healed":2"""))
-    // tight: the named list drops, the stable counts and rps_best stay
-    val shed1 = line(full.length - 1)
-    assert(shed1.contains(""""contended_n":2""") && shed1.contains("rps_best"))
-    assert(!shed1.contains(""""contended":["""))
-    // tighter still: rps_best drops too; errors and the counts stay
-    val shed2 = line(shed1.length - 1)
-    assert(!shed2.contains("rps_best") && shed2.contains(""""rps":[1,2]"""))
-    assert(shed2.contains(""""errors":["x"]""") && shed2.contains(""""healed":2"""))
-    // the last rungs drop the counts and then the bench-internal
-    // diagnostics, but never the contract fields or errors
-    val shed3 = line(1)
-    assert(!shed3.contains(""""batch""""), shed3)
-    assert(shed3.contains(""""queries"""") && shed3.contains(""""errors":["x"]"""))
-    // every rung is valid JSON shape: one object, balanced braces
-    Seq(full, shed1, shed2, shed3).foreach { l =>
-      assert(l.startsWith("{") && l.endsWith("}") &&
-        l.count(_ == '{') == l.count(_ == '}'), l)
-    }
-  }
-
-  test("contention flags need BOTH gates: >2x the best rep AND >0.25s above it") {
-    val mins = Map("big" -> 2.0, "small" -> 0.05, "steady" -> 3.0,
-      "border" -> 1.0, "zero" -> 0.0)
-    val medians = Seq(
-      "big" -> 6.5,     // 3.2x and +4.5 s — the r10 tx06 shape: flagged
-      "small" -> 0.15,  // 3x but +0.1 s — jitter on a tiny row: clean
-      "steady" -> 3.4,  // +0.4 s but 1.13x — plan variance: clean
-      "border" -> 2.0,  // exactly 2x — not "clearly above": clean
-      "zero" -> 0.5)    // degenerate 0 min never divides: clean
-    assert(Bench.contendedKeys(medians, mins) == Seq("big"))
-    // single-rep side rows have min == median and can never flag
-    assert(Bench.contendedKeys(Seq("st01" -> 9.0), Map("st01" -> 9.0)).isEmpty)
   }
 
   test("a throwing query lands in the error map, never as a silent fast row") {
@@ -205,62 +48,11 @@ class BenchKeysSpec extends AnyFunSuite {
     assert(errors("boom_query").contains("synthetic failure"))
   }
 
-  test("a throwing SIDE row lands in the error map under every row name it owed") {
-    // the r7 failure class's last seam: ivf/lsh splits and st01-st03
-    // returned Seq.empty on failure — a missing row with rc 0. The
-    // guard must turn one thrown body into error rows for each name.
-    val errors = collection.mutable.LinkedHashMap.empty[String, String]
-    val ok = Bench.guardRows(Seq("a_build", "a_probe"), errors) {
-      Seq("a_build" -> 1.0, "a_probe" -> 2.0)
-    }
-    assert(ok.map(_._1) == Seq("a_build", "a_probe") && errors.isEmpty)
-    val broken = Bench.guardRows(Seq("b_build", "b_probe"), errors) {
-      throw new RuntimeException("side-row failure")
-    }
-    assert(broken.isEmpty)
-    assert(errors.keySet == Set("b_build", "b_probe"))
-    assert(errors.values.forall(_.contains("side-row failure")))
-  }
-
-  test("sweep stages report median/best rps and flag contention with both gates") {
-    import graft.streaming.ThroughputHarness.{Result, SweepStage}
-    def res(rps: Double) =
-      Result("complete", 100000, 100000, rps, 100.0, 3, 300000)
-    // r11's exact shape: driver 254k vs quiet 446k/411k — the median
-    // picks an observed value and the best says what was possible
-    val r11 = SweepStage("complete", 100000,
-      Seq(res(253764), res(446000), res(411000)))
-    assert(r11.medianRps == 411000.0 && r11.bestRps == 446000.0)
-    // 446/411 = 1.09x — NOT contended (median is trustworthy)
-    assert(!r11.contended)
-    // one healthy rep among crushed ones: flagged (re-measure)
-    val crushed = SweepStage("complete", 100000,
-      Seq(res(100000), res(90000), res(400000)))
-    assert(crushed.medianRps == 100000.0 && crushed.contended)
-    // relative gate alone isn't enough: tiny absolute swings are noise
-    val tiny = SweepStage("update", 100000, Seq(res(10000), res(26000)))
-    assert(tiny.medianRps == 10000.0 && !tiny.contended)
-    // even rep count takes the LOWER median (observed, conservative)
-    val even = SweepStage("update", 500000, Seq(res(300000), res(320000)))
-    assert(even.medianRps == 300000.0 && even.bestRps == 320000.0)
-    // degenerate empty stage never divides by zero
-    assert(!SweepStage("complete", 100000, Nil).contended)
-    // a 0-batch rep is "nothing measured", not "measured zero": the
-    // timeouts counter carries it into the record (r18's close-out
-    // bench had an all-timeout stage reading as silent collapse with
-    // contended:false — this field is the tripwire)
-    val timedOut = Result("update", 500000, 100000, 0.0, 0.0, 0, 0)
-    val mixed = SweepStage("update", 500000, Seq(timedOut, res(400000)))
-    assert(mixed.timeouts == 1)
-    assert(mixed.json.contains("\"timeouts\":1"))
-    assert(SweepStage("update", 500000, Seq(timedOut, timedOut)).timeouts == 2)
-  }
-
   test("calib median is the lower observed median, like every query row") {
-    assert(Bench.calibMedian(Seq(3.0, 1.0, 2.0)) == 2.0)
-    assert(Bench.calibMedian(Seq(7.0)) == 7.0)
+    assert(Bench.lowerMedian(Seq(3.0, 1.0, 2.0)) == 2.0)
+    assert(Bench.lowerMedian(Seq(7.0)) == 7.0)
     // even count: the LOWER observed value, not an interpolation
-    assert(Bench.calibMedian(Seq(4.0, 8.0)) == 4.0)
+    assert(Bench.lowerMedian(Seq(4.0, 8.0)) == 4.0)
   }
 
   test("medianRows is the per-query lower median across reps") {
@@ -274,22 +66,5 @@ class BenchKeysSpec extends AnyFunSuite {
     assert(Bench.medianRows(Seq(Seq("q" -> 7.0))) == Seq("q" -> 7.0))
     assert(Bench.medianRows(Seq(Seq("q" -> 4.0), Seq("q" -> 8.0))) ==
       Seq("q" -> 4.0))
-  }
-
-  test("foldSideReps medians the side rows and survives failed reps") {
-    // the side-row analog of medianRows: a guarded rep that threw
-    // contributed Seq.empty — it must neither crash the fold nor
-    // erase the surviving observations
-    val obs = Seq(
-      Seq("a_build" -> 9.0, "a_probe" -> 1.0),
-      Seq.empty[(String, Double)], // a failed rep
-      Seq("a_build" -> 3.0, "a_probe" -> 5.0),
-      Seq("a_build" -> 5.0, "a_probe" -> 3.0))
-    // three surviving reps → per-key lower median of {9,3,5} / {1,5,3}
-    assert(Bench.foldSideReps(obs) == Seq("a_build" -> 5.0, "a_probe" -> 3.0))
-    // all reps failed → empty record (the errors map drives exit 1)
-    assert(Bench.foldSideReps(Seq(Seq.empty, Seq.empty)).isEmpty)
-    // single surviving observation passes through untouched
-    assert(Bench.foldSideReps(Seq(Seq("x" -> 2.5))) == Seq("x" -> 2.5))
   }
 }

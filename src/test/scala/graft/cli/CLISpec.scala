@@ -2,6 +2,7 @@ package graft.cli
 
 import graft.SparkSpecBase
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class CLISpec extends SparkSpecBase {
 
@@ -78,6 +79,22 @@ class CLISpec extends SparkSpecBase {
       spark, update = true, targetRps = 20000, minBatches = 2, timeoutMs = 30000)
     assert(r.batches >= 2 && r.rows > 0 && r.sustainedRps > 0, r.json)
     assert(r.json.contains("\"mode\":\"update\""))
+  }
+
+  test("emit: a query that fails to start leaks neither temp dir") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def harnessDirs(): Set[String] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("thr-out") || n.startsWith("thr-ckpt")).toSet
+      finally ls.close()
+    }
+    val before = harnessDirs()
+    // the rate source rejects a non-positive rate when the query starts
+    intercept[IllegalArgumentException] {
+      graft.streaming.ThroughputHarness.run(spark, update = false, targetRps = 0)
+    }
+    assert(harnessDirs() -- before == Set.empty[String])
   }
 
   test("table verbs: history/restore/clone/vacuum against a real table dir") {

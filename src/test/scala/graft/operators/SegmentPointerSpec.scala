@@ -79,7 +79,7 @@ class SegmentPointerSpec extends AnyFunSuite {
     assert(names.forall(n => !n.contains('/')), "a name must be one path element")
   }
 
-  test("a path-shaped marker body never resolves (publish refuses, resolveBody rejects)") {
+  test("a path-shaped marker body never resolves (publish refuses, resolveName rejects)") {
     val root = freshRoot()
     intercept[IllegalArgumentException] {
       SegmentPointer.publish(root, "_head", "_seg-x/sub")
