@@ -46,6 +46,7 @@ object Verify {
       System.err.println(s"[verify] ${errors.size} quer(ies) FAILED: " +
         errors.keys.mkString(", "))
     operators.MergeTable.cleanupFixtures() // tmp fixture tables (q59-q68)
+    IndexLifecycle.evictAll(spark) // session index dirs, pp12's shard dir
     spark.stop()
   }
 }

@@ -100,19 +100,30 @@ object PosixCommitStore extends CommitStore {
     tmp
   }
 
-  def putIfAbsent(path: Path, body: Array[Byte]): Boolean = {
-    val tmp = writeTmp(path, body)
-    try { java.nio.file.Files.createLink(path, tmp); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+  /** The one POSIX commit primitive: publish a fully written staging
+    * file `tmp` (same directory as `path`) under `path`. `replace =
+    * false` is put-if-absent through `link(2)`, which never replaces:
+    * false on the CAS loss. `replace = true` is an atomic rename over
+    * any existing file. The staging file is gone when this returns.
+    * Shared with [[graft.streaming.GraftCheckpointFileManager]], so the
+    * stream's checkpoint commits the way the table log does.
+    */
+  def publish(tmp: Path, path: Path, replace: Boolean): Boolean =
+    try {
+      if (replace)
+        java.nio.file.Files.move(tmp, path,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      else java.nio.file.Files.createLink(path, tmp)
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException if !replace => false }
     finally { java.nio.file.Files.deleteIfExists(tmp); () }
-  }
+
+  def putIfAbsent(path: Path, body: Array[Byte]): Boolean =
+    publish(writeTmp(path, body), path, replace = false)
 
   def putReplace(path: Path, body: Array[Byte]): Unit = {
-    val tmp = writeTmp(path, body)
-    java.nio.file.Files.move(tmp, path,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    publish(writeTmp(path, body), path, replace = true); ()
   }
 
   def read(path: Path): Option[Array[Byte]] =

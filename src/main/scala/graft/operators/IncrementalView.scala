@@ -485,14 +485,16 @@ object IncrementalView {
     * a net pre-image delta) is folded in with [[applyDelta]] and
     * committed under the span's end generation. Exactly-once end to
     * end: the source replays a checkpointed span deterministically,
-    * and the `mv_src_gen` guard makes re-folding it a no-op.
+    * and the `mv_src_gen` guard makes re-folding it a no-op. The query
+    * and its source run on [[graft.streaming.Topology.streamingSession]]'s
+    * clone of `s` (graft's checkpoint manager); the merges run on `s`.
     */
   def maintainStream(s: SparkSession, srcDir: String, mvDir: String,
                      spec: ViewSpec, checkpointDir: String): StreamingQuery = {
     assertSpecMatchesStore(mvDir, spec)
     val (startGen, srcKey) = srcMeta(mvDir)
-    MergeTable.changesStream(s, srcDir, srcKey,
-      startGen = startGen, preImages = true)
+    MergeTable.changesStream(graft.streaming.Topology.streamingSession(s), srcDir,
+      srcKey, startGen = startGen, preImages = true)
       .writeStream.option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // the batch fixes the span's END generation; its CONTENT is

@@ -355,13 +355,18 @@ object Pipeline {
       .orderBy("doc_id", "chunk_idx")
   }
 
+  // pp12's output dir is a session artifact: `IndexLifecycle.evictAll`
+  // deletes it (the query itself rewrites it on every run)
+  private val shardDirLife = new graft.IndexLifecycle[String]("pp12-shard-dir",
+    release = (_, dir) => graft.IndexLifecycle.deleteRecursively(dir))
+
   val pp12_shard_files: Q = (s, d) => {
-    val out = java.nio.file.Paths.get(
+    val out = shardDirLife.getOrBuild(s, d)(java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"),
       "graft-shards-" + java.lang.Long.toHexString(
         scala.util.hashing.MurmurHash3.stringHash(d) & 0xffffffffL) +
         "-p" + ProcessHandle.current().pid() +
-        "-s" + java.lang.Integer.toHexString(System.identityHashCode(s))).toString
+        "-s" + java.lang.Integer.toHexString(System.identityHashCode(s))).toString)
     graft.IndexLifecycle.deleteRecursively(out)
     writeShards(s, d, out).orderBy("shard")
   }

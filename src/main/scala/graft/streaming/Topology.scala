@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
 
 /** The reference's topology model (Topology.hs, HardcodedTopology.hs)
@@ -289,26 +290,48 @@ final case class Topology(spout: Spout, bolts: Seq[Bolt], sink: Sink,
     */
   def withStateBackend(b: StateBackend): Topology = copy(stateBackend = b)
 
-  /** Compile and launch: the returned query is the running topology. */
+  /** Compile and launch: the returned query is the running topology.
+    * It runs on [[Topology.streamingSession]]'s private clone of
+    * `spark`, which carries graft's checkpoint manager and this
+    * topology's state backend; the caller's session conf is never
+    * touched. The spout opens on the clone, so a source's own log
+    * commits through the same manager; the wired plan is transplanted
+    * because spouts may close over DataFrames of the caller's session
+    * (e.g. a MemoryStream). A temp view the sink registers (a memory
+    * sink's result) is shared back to `spark`.
+    */
   def run(spark: SparkSession): StreamingQuery = {
-    val wired = bolts.foldLeft(spout.open(spark))((df, b) => b.transform(df))
-    stateBackend.providerClass match {
-      case None => sink.start(wired, trigger)
-      case Some(cls) =>
-        // the provider conf is captured when the query starts, so
-        // the override lives on a PRIVATE clone of the wired
-        // session: the caller's session conf is never touched, not
-        // even transiently, so a concurrent query started on it can
-        // never capture this provider (the earlier set→start→restore
-        // under a lock still had that window). The clone shares the
-        // SparkContext and catalog and inherits the runtime conf;
-        // the wired plan is transplanted because spouts may close
-        // over DataFrames of the caller's session.
-        import org.apache.spark.sql.graftbridge.SessionBridge
-        val cloned = SessionBridge.cloneWithConf(wired.sparkSession,
-          "spark.sql.streaming.stateStore.providerClass" -> cls)
-        sink.start(SessionBridge.transplant(cloned, wired), trigger)
-    }
+    val session = Topology.streamingSession(spark,
+      stateBackend.providerClass.map(Topology.StateStoreProviderKey -> _).toSeq: _*)
+    val wired = bolts.foldLeft(spout.open(session))((df, b) => b.transform(df))
+    SessionBridge.sharingTempViews(session, spark)(
+      sink.start(SessionBridge.transplant(session, wired), trigger))
+  }
+}
+
+object Topology {
+  private val StateStoreProviderKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** The session every graft-started stream runs on: a private clone
+    * of `s` whose checkpoint commits through
+    * [[GraftCheckpointFileManager]] (unless `s` already names a
+    * manager, which the clone then keeps), with `confs` overlaid.
+    * Query-start confs are captured when the query starts, so they
+    * live on the clone: the caller's session conf is never touched,
+    * not even transiently, and a concurrent query started on it can
+    * never capture them (an earlier set→start→restore under a lock
+    * still had that window). The clone shares the SparkContext and
+    * catalog and inherits the runtime conf. Streaming listeners
+    * registered on `s` by then are added to the clone too, so they
+    * keep hearing the streams graft starts for the caller.
+    */
+  def streamingSession(s: SparkSession, confs: (String, String)*): SparkSession = {
+    val manager = GraftCheckpointFileManager.ConfKey -> s.conf
+      .getOption(GraftCheckpointFileManager.ConfKey)
+      .getOrElse(classOf[GraftCheckpointFileManager].getName)
+    val c = SessionBridge.cloneWithConf(s, manager +: confs: _*)
+    s.streams.listListeners().foreach(c.streams.addListener)
+    c
   }
 }
 

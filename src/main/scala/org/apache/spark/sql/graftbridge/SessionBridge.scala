@@ -3,9 +3,10 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Narrow bridge into two `private[sql]` session APIs that have no
-  * public equivalent, used by [[graft.streaming.Topology.run]] to
-  * scope a state-store provider override to ONE streaming query:
+/** Narrow bridge into three `private[sql]` session APIs that have no
+  * public equivalent, used by [[graft.streaming.Topology]] to scope
+  * query-start confs (graft's checkpoint file manager, a topology's
+  * state-store provider) to the streams graft starts:
   *
   *  - `cloneSession()` — unlike the public `newSession()`, the clone
   *    inherits the parent's RUNTIME conf (and temp views/UDFs), so a
@@ -15,14 +16,17 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    the clone. Topology spouts may close over DataFrames of the
   *    caller's session (e.g. a MemoryStream), so the plan has to be
   *    transplanted rather than rebuilt.
+  *  - the session catalog's temp views — a view the clone's query
+  *    registers (a memory sink's result) is shared back to the
+  *    caller's session.
   *
   * One of the three sanctioned files outside the `graft` namespace
   * (with [[org.apache.spark.sql.graft.ColumnBridge]] and
   * [[org.apache.spark.sql.graft.StreamingShim]] — each a narrow,
-  * documented `private[sql]` seam); this one exists so the provider
-  * override can live on a private session instead of being
-  * set-then-restored on the caller's (which a concurrent query on
-  * the same session could capture mid-window).
+  * documented `private[sql]` seam); this one exists so those confs
+  * can live on a private session instead of being set-then-restored
+  * on the caller's (which a concurrent query on the same session
+  * could capture mid-window).
   */
 object SessionBridge {
 
@@ -43,6 +47,23 @@ object SessionBridge {
   def transplant(to: SparkSession, df: DataFrame): DataFrame =
     ClassicDataset.ofRows(to.asInstanceOf[ClassicSession],
       df.asInstanceOf[ClassicDataset[Row]].queryExecution.logical)
+
+  /** Run `start` — which starts a query on the clone `from` — and
+    * register in `to` every temp view it created or replaced on
+    * `from`: a memory sink names its result view on the session its
+    * query runs on, and the caller reads it by name on its own.
+    */
+  def sharingTempViews[T](from: SparkSession, to: SparkSession)(start: => T): T = {
+    val src = from.asInstanceOf[ClassicSession].sessionState.catalog
+    def views = src.getTempViewNames().flatMap(n => src.getRawTempView(n).map(n -> _)).toMap
+    val before = views
+    val started = start
+    val dst = to.asInstanceOf[ClassicSession].sessionState.catalog
+    views.foreach { case (n, v) =>
+      if (!before.get(n).exists(_ eq v)) dst.createTempView(n, v, overrideIfExists = true)
+    }
+    started
+  }
 
   /** A DataFrame over an arbitrary logical plan — used by
     * `MergeTable.readIndexed` to hand Catalyst a `LogicalRelation`

@@ -38,6 +38,23 @@ class IndexLifecycleSpec extends SparkSpecBase {
     assert(IndexLifecycle.evictAll(spark) == 0)
   }
 
+  test("evictAll deletes the session's pp12 shard dir") {
+    import scala.jdk.CollectionConverters._
+    val s = spark.newSession()
+    val suffix = s"-p${ProcessHandle.current().pid()}-s" +
+      Integer.toHexString(System.identityHashCode(s))
+    def shardDirs(): List[String] = {
+      val ls = java.nio.file.Files.list(java.nio.file.Path.of(sys.props("java.io.tmpdir")))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft-shards-") && n.endsWith(suffix)).toList
+      finally ls.close()
+    }
+    pipeline.Pipeline.pp12_shard_files(s, sfDir).count()
+    assert(shardDirs().size == 1, s"expected one shard dir, got ${shardDirs()}")
+    assert(IndexLifecycle.evictAll(s) >= 1)
+    assert(shardDirs().isEmpty, s"shard dir survived evictAll: ${shardDirs()}")
+  }
+
   test("stale hits re-validate: an index deleted out from under the memo rebuilds") {
     val dir1 = similarity.Similarity.ivfIndexFor(spark, sfDir)
     // simulate external disposal (another process cleaned the tmp dir)

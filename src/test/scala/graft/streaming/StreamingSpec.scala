@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends SparkSpecBase {
   import spark.implicits._
@@ -431,6 +432,94 @@ class StreamingSpec extends SparkSpecBase {
       .as[(String, Long)].collect().toMap
     // state accumulated ACROSS the restart: alpha=3 (2 pre + 1 post)
     assert(counts == Map("alpha" -> 3L, "beta" -> 1L, "gamma" -> 1L))
+  }
+
+  test("checkpoint manager: a default-manager checkpoint restarts under Topology.run and back, exactly-once; the caller's conf is untouched") {
+    implicit val sql = spark.sqlContext
+    val key = GraftCheckpointFileManager.ConfKey
+    assert(spark.conf.getOption(key).isEmpty, "test precondition: no manager set")
+    val mem = MemoryStream[String]
+    val out = tmpDir("ckm-out")
+    val ckpt = tmpDir("ckm-ckpt")
+    val topo = WordCountTopology(Spout("mem", _ => mem.toDF()), out, ckpt, topN = 5)
+    // Spark's default manager: a plain writeStream on the caller's session
+    def plainRun() = topo.sink.start(
+      topo.bolts.foldLeft(topo.spout.open(spark))((df, b) => b.transform(df)), None)
+    def drain(q: org.apache.spark.sql.streaming.StreamingQuery, lines: String*): Unit = {
+      mem.addData(lines); q.processAllAvailable()
+    }
+    val offsets = java.nio.file.Path.of(ckpt, "offsets")
+    def hadoopSidecar(batch: Long) = java.nio.file.Files.exists(offsets.resolve(s".$batch.crc"))
+    val batches = Seq(
+      Seq("the cat and the hat", "the bat"), Seq("a cat a hat"),
+      Seq("the end of the cat"), Seq("bat bat the"))
+
+    val q1 = plainRun()
+    try drain(q1, batches(0): _*) finally q1.stop()
+    assert(hadoopSidecar(0), "test precondition: the default manager writes .crc sidecars")
+    val q2 = topo.run(spark)
+    try { drain(q2, batches(1): _*); drain(q2, batches(2): _*) } finally q2.stop()
+    val graftLast = ExactlyOnceSink.committed(out).max
+    assert(!hadoopSidecar(graftLast), "Topology.run committed through the default manager")
+    assert(spark.conf.getOption(key).isEmpty, "Topology.run set the manager on the caller's session")
+    val q3 = plainRun()
+    try drain(q3, batches(3): _*) finally q3.stop()
+
+    val committed = ExactlyOnceSink.committed(out)
+    assert(committed == (0L to committed.max).toSet, s"gap in sink markers: $committed")
+    assert(committed.max > graftLast)
+    val top = spark.read.parquet(ExactlyOnceSink.batchDir(out, committed.max))
+      .orderBy(col("cnt").desc, col("word")).as[(String, Long)].collect().toList
+    val oneShot = WordCountTopology.countBolt.transform(WordCountTopology.tokenize
+      .transform(batches.flatten.toDF("value")))
+      .orderBy(col("cnt").desc, col("word")).limit(5).as[(String, Long)].collect().toList
+    assert(top == oneShot)
+    val leftovers = java.nio.file.Files.walk(java.nio.file.Path.of(ckpt))
+    try assert(!leftovers.iterator().asScala.exists(p =>
+      graft.operators.PosixCommitStore.isStagingName(p.getFileName.toString)),
+      "staging files left in the checkpoint")
+    finally leftovers.close()
+
+    // a manager the caller names is kept, on the caller's session too
+    val s2 = spark.newSession()
+    val fileContext = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileContextBasedCheckpointFileManager"
+    s2.conf.set(key, fileContext)
+    val mem2 = MemoryStream[String](s2)
+    val ckpt2 = tmpDir("ckm-ckpt2")
+    val q4 = WordCountTopology(Spout("mem", _ => mem2.toDF()), tmpDir("ckm-out2"), ckpt2)
+      .run(s2)
+    try { mem2.addData("kept manager"); q4.processAllAvailable() } finally q4.stop()
+    assert(java.nio.file.Files.exists(java.nio.file.Path.of(ckpt2, "offsets", ".0.crc")),
+      "the caller's manager was replaced")
+    assert(s2.conf.get(key) == fileContext)
+  }
+
+  test("a streaming listener on the caller's session hears Topology.run's progress") {
+    implicit val sql = spark.sqlContext
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val heard = new java.util.concurrent.ConcurrentLinkedQueue[(java.util.UUID, String)]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        heard.add((e.progress.runId, s"${e.progress.batchId}@${e.progress.timestamp}"))
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val mem = MemoryStream[String]
+      val q = WordCountTopology(Spout("mem", _ => mem.toDF()), tmpDir("lst-out"),
+        tmpDir("lst-ckpt")).run(spark)
+      try {
+        mem.addData("heard once"); q.processAllAvailable()
+        def ours = heard.iterator().asScala.filter(_._1 == q.runId).map(_._2).toList
+        val deadline = System.currentTimeMillis() + 10000L
+        while (ours.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        assert(ours.nonEmpty, "no progress event reached the caller's listener")
+        Thread.sleep(200) // let a duplicate delivery land, if there is one
+        assert(ours.distinct == ours, s"progress heard twice: $ours")
+      } finally q.stop()
+    } finally spark.streams.removeListener(listener)
   }
 
   test("streaming top-N bolt: bounded TopN monoid state across batches") {
